@@ -1,65 +1,116 @@
-"""Expression compiler: xpath metadata → Catalyst Column expressions.
+"""Expression compiler: xpath metadata → Catalyst SQL expression text.
 
-This replaces the reference's two extraction mechanisms — ~600 per-doc
-interpreted xpath evaluations (scrapeXML, build_efile_database_functions.R:307-4149)
-and R source-code generation from concordance slices (create_code_chunks,
-:5186-5291) — with data-driven Column construction. Catalyst then gets a
-single wide projection it can whole-stage-codegen; nested-schema pruning
-drops unreferenced XML subtrees at the parse.
+This replaces the reference's three extraction mechanisms — ~600
+per-doc interpreted xpath evaluations (scrapeXML,
+build_efile_database_functions.R:307-2860), the generic
+``build_rdb_table`` (:121-276) and the hand-written Schedule N section
+(:2875-4149), plus the R source-code generation from concordance
+slices (create_code_chunks, :5186-5291) — with data-driven SQL. Every
+extracted table (CORE, the concordance tables, Schedule N) is composed
+as SQL TEXT on the driver and crosses to the JVM as one ``selectExpr``
+per projection. Catalyst then gets a single wide projection it can
+whole-stage-codegen; nested-schema pruning drops unreferenced XML
+subtrees at the parse.
 
-Expressions are composed as SQL TEXT driver-side and handed to the JVM
-as one ``F.expr`` per emitted column: building the same trees out of
-Column objects costs one py4j round-trip per operator — ~39k round
-trips ≈ 6 s of plan-build latency for the 237-column CORE projection —
-while a single parse of the equivalent SQL string is milliseconds. The
-schema walk itself reads the driver-side XmlSchemaBuilder tree, so no
-JVM traffic happens until the final ``F.expr``.
+Building the same trees out of Column objects costs one py4j round
+trip per operator. Measured on a shared 4-core host at ``local[4]``,
+building the 12 default tables lazily over the 13 test fixtures (warm,
+median of 5, two runs each): the 11 non-CORE tables took 5.1-8.1 s of
+driver wall and 2.5-2.9 s of Python CPU as Column trees, and
+1.0-1.4 s wall / 0.16-0.20 s Python CPU as SQL text; CORE's 237
+columns take 0.3-0.4 s / 0.03 s either way.
+
+One walk resolves every path. ``walk`` takes a start node and the SQL
+of the value at that node, so document scalars (the schema root over
+the ``doc`` column), repeating-group roots and group-member leaves
+under an exploded ``_g`` share one one-open-array rule and one
+``_VALUE`` descent. The walk reads only the driver-side
+XmlSchemaBuilder trie, so no JVM traffic happens until the final
+``selectExpr``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from collections.abc import Iterable
 
-from ..plans.xml_schema import ATTR_PREFIX, VALUE_TAG, XmlSchemaBuilder, _strip, resolve_child
+from ..plans.xml_schema import (
+    ATTR_PREFIX,
+    VALUE_TAG,
+    XmlSchemaBuilder,
+    _Node,
+    _strip,
+    resolve_child,
+)
+
+# IRS XSD leaf-name convention (SURVEY §1.2): USAmountType leaves end
+# in Amt, counts in Cnt/Nbr/Qty — integral in typed mode.
+NUM_LEAF_SUFFIXES = ("Amt", "Cnt", "Nbr", "Qty")
 
 
 def _q(name: str) -> str:
-    """Backquote one field segment for SQL field access."""
+    """Backquote one field segment or column name for SQL."""
     return "`" + name.replace("`", "``") + "`"
 
 
+def sql_str(s: str) -> str:
+    """SQL single-quoted string literal."""
+    return "'" + s.replace("'", "''") + "'"
+
+
+def aliased(pairs: Iterable[tuple[str, str]]) -> list[str]:
+    """(column, sql) pairs → ``selectExpr`` items, in order."""
+    return [f"{x} AS {_q(v)}" for v, x in pairs]
+
+
+def leaf_names(paths) -> tuple[str, ...]:
+    """Last segment of each xpath / rel-path."""
+    return tuple(p.rstrip("/").rsplit("/", 1)[-1] for p in paths)
+
+
+def typed_sql(sql: str, spark_type: str | None) -> str:
+    """Typed-mode cast (SURVEY §1.3 upgrade) shared by every builder.
+
+    ``try_cast``, not ``cast``: under Spark 4's default ANSI mode a
+    plain cast THROWS on any filing whose field doesn't parse (stray
+    text in an Amt, malformed date), failing the whole build; try_cast
+    degrades the one value to NULL — the reference's as.numeric
+    coercion semantics. ``boolean`` recodes the checkbox values
+    X/1/true to true (NULL stays NULL)."""
+    if spark_type is None:
+        return sql
+    if spark_type == "boolean":
+        return f"({sql} IN ('X', '1', 'true'))"
+    return f"try_cast({sql} AS {spark_type})"
+
+
 class ExprCompiler:
-    def __init__(self, schema_builder: XmlSchemaBuilder, doc_col: str = "doc"):
+    def __init__(
+        self, schema_builder: XmlSchemaBuilder, doc_col: str = "doc"
+    ) -> None:
         self.b = schema_builder
         self.doc = doc_col
 
-    # ------------------------------------------------------ sql access
+    # ------------------------------------------------------------ walk
 
-    def _walk_sql(self, xpath: str) -> tuple[str, int, str]:
-        """Resolve an xpath to (sql_expr, array_depth, kind).
+    def _descend(
+        self, parts: list[str], node: _Node, sql: str, path: str
+    ) -> tuple[str, int, _Node]:
+        """Element segments → (sql, array_depth, node).
 
-        array_depth counts repeated ancestors crossed (field extraction
-        over an array column yields an array of the member values).
-        kind ∈ {text, value, struct, attr}.
-        """
-        parts = _strip(xpath)
-        attr: str | None = None
-        if parts and parts[-1].startswith("@"):
-            attr = parts[-1][1:]
-            parts = parts[:-1]
-        node = self.b.root
-        sql = _q(self.doc)
+        array_depth counts the repeated elements crossed, capped at 1
+        (field extraction over an array column yields an array of the
+        member values)."""
         depth = 0
         for seg in parts:
-            node = resolve_child(node, seg)
-            if node is None:
-                raise KeyError(f"xpath not in schema: {xpath}")
+            hit = resolve_child(node, seg)
+            if hit is None:
+                raise KeyError(f"xpath not in schema: {path}")
+            node = hit[1]
             sql = f"{sql}.{_q(seg)}"
             if node.repeated:
                 depth += 1
                 if depth >= 2:
-                    # NESTED repeated ancestors (e.g. the derived MANY
+                    # NESTED repeated elements (e.g. the derived MANY
                     # catalog marks both Schedule N's LiquidationTable
                     # and its inner LiquidationDetail): field access
                     # only resolves over array<struct>, never
@@ -70,134 +121,125 @@ class ExprCompiler:
                     # member would otherwise null out the whole set).
                     sql = f"flatten(array_compact({sql}))"
                     depth = 1
+        return sql, depth, node
+
+    def walk(
+        self,
+        path: str,
+        start: _Node | None = None,
+        base: str | None = None,
+        element: bool = False,
+    ) -> tuple[str, int, str]:
+        """Resolve *path* to (sql, array_depth, kind).
+
+        ``start=None``: *path* is a document xpath walked from the
+        schema root over the doc column. Otherwise *path* is a member
+        rel-path walked from the group node ``start``, whose value is
+        the SQL ``base`` (the exploded ``_g``).
+
+        kind ∈ {text, value, struct, attr}; ``element=True`` stops at
+        the element itself (kind ``element``) — never descending into
+        ``_VALUE`` — so callers can test node existence independent of
+        element text."""
+        if start is None:
+            parts = _strip(path)
+        else:
+            parts = [p for p in path.split("/") if p]
+        attr: str | None = None
+        if parts and parts[-1].startswith("@"):
+            attr = parts[-1][1:]
+            parts = parts[:-1]
+        sql, depth, node = self._descend(
+            parts,
+            self.b.root if start is None else start,
+            _q(self.doc) if base is None else base,
+            path,
+        )
         if attr is not None:
             if attr not in node.attrs:
-                raise KeyError(f"attribute not in schema: {xpath}")
+                raise KeyError(f"attribute not in schema: {path}")
             return f"{sql}.{_q(ATTR_PREFIX + attr)}", depth, "attr"
+        if element:
+            return sql, depth, "element"
         if node.children or node.attrs:
             if node.is_leaf or (node.attrs and not node.children):
                 return f"{sql}.{_q(VALUE_TAG)}", depth, "value"
             return sql, depth, "struct"
         return sql, depth, "text"
 
-    @staticmethod
-    def _to_scalar_sql(sql: str, depth: int) -> str:
-        """First non-null element across any repeated ancestors."""
-        for _ in range(depth - 1):
-            sql = f"flatten({sql})"
-        if depth > 0:
+    def group(self, xpath: str) -> tuple[str, _Node]:
+        """A repeating-group root → (SQL of its element array, node),
+        for ``explode`` plus member walks from the node."""
+        sql, _depth, node = self._descend(
+            _strip(xpath), self.b.root, _q(self.doc), xpath
+        )
+        return sql, node
+
+    # ---------------------------------------------------------- access
+
+    def scalar_sql(
+        self, path: str, start: _Node | None = None, base: str | None = None
+    ) -> str:
+        """Text value at *path* (first match in document order), or
+        NULL."""
+        sql, depth, kind = self.walk(path, start, base)
+        if kind == "struct":
+            # element with child elements has no direct text; used for
+            # presence-style extraction only
+            return "CAST(NULL AS STRING)"
+        if depth:
             # get() is NULL-safe on empty arrays (element_at throws
             # under ANSI mode, the Spark 4 default)
             sql = f"get(array_compact({sql}), 0)"
         return sql
 
-    def _scalar_sql(self, xpath: str) -> str:
-        sql, depth, kind = self._walk_sql(xpath)
-        if kind == "struct":
-            # element with child elements has no direct text; used for
-            # presence-style extraction only
-            return "CAST(NULL AS STRING)"
-        return self._to_scalar_sql(sql, depth)
-
-    def _matches_array_sql(self, xpath: str) -> str:
-        sql, depth, _kind = self._walk_sql(xpath)
+    def matches_sql(self, xpath: str) -> str:
+        """All matched text values at xpath as array<string> (for the
+        reference's paste(collapse=' ') multi-match vars, :527-528)."""
+        sql, depth, _kind = self.walk(xpath)
         if depth == 0:
             return f"array_compact(array({sql}))"
-        for _ in range(depth - 1):
-            sql = f"flatten({sql})"
         return f"array_compact({sql})"
 
-    def _presence_sql(self, xpath: str) -> str:
-        # presence is a NODE test (the reference's length()>0 over the
-        # match set), not a text test: an attribute-only element like
-        # <Organization501cInd organization501cTypeTxt="3"/> IS present
-        # even though its _VALUE is null — so walk to the node and stop
-        # before the final _VALUE descent. Attribute xpaths keep the
-        # full walk (presence = the attribute carries a value).
-        parts = _strip(xpath)
-        if parts and parts[-1].startswith("@"):
-            sql, depth, _kind = self._walk_sql(xpath)
-        else:
-            sql, depth = self._walk_node_sql(xpath)
-        if depth > 0:
-            for _ in range(depth - 1):
-                sql = f"flatten({sql})"
+    def presence_sql(self, xpath: str) -> str:
+        """Does the element exist (any version/value, incl. empty
+        checkbox)? — the reference's length()>0 test.
+
+        A NODE test, not a text test: an attribute-only element like
+        <Organization501cInd organization501cTypeTxt="3"/> IS present
+        even though its _VALUE is null. Attribute xpaths test that the
+        attribute carries a value."""
+        sql, depth, _kind = self.walk(xpath, element=True)
+        if depth:
             return f"(size(array_compact({sql})) > 0)"
         return f"({sql} IS NOT NULL)"
 
-    def _walk_node_sql(self, xpath: str) -> tuple[str, int]:
-        """Like ``_walk_sql`` but stops at the element node itself —
-        never descending into ``_VALUE`` — so callers can test node
-        existence independent of element text."""
-        parts = _strip(xpath)
-        node = self.b.root
-        sql = _q(self.doc)
-        depth = 0
-        for seg in parts:
-            node = resolve_child(node, seg)
-            if node is None:
-                raise KeyError(f"xpath not in schema: {xpath}")
-            sql = f"{sql}.{_q(seg)}"
-            if node.repeated:
-                depth += 1
-                if depth >= 2:  # see _walk_sql: one open array max
-                    sql = f"flatten(array_compact({sql}))"
-                    depth = 1
-        return sql, depth
-
-    # ---------------------------------------------------------- access
-
-    def _walk(self, xpath: str) -> tuple[Column, int, str]:
-        """Column form of ``_walk_sql`` (builders that explode repeated
-        groups use the raw column + depth directly)."""
-        sql, depth, kind = self._walk_sql(xpath)
-        return F.expr(sql), depth, kind
-
-    def scalar(self, xpath: str) -> Column:
-        """Text value at xpath (first match), or NULL."""
-        return F.expr(self._scalar_sql(xpath))
-
-    def matches_array(self, xpath: str) -> Column:
-        """All matched text values at xpath as array<string> (for the
-        reference's paste(collapse=' ') multi-match vars, :527-528)."""
-        return F.expr(self._matches_array_sql(xpath))
-
-    def presence(self, xpath: str) -> Column:
-        """Does the element exist (any version/value, incl. empty
-        checkbox)? — the reference's length()>0 test."""
-        return F.expr(self._presence_sql(xpath))
-
     # ------------------------------------------------------ composites
 
-    def _coalesce_scalar_sql(self, xpaths: list[str]) -> str:
-        exprs = [self._scalar_sql(x) for x in xpaths]
+    def coalesce_sql(
+        self,
+        paths: list[str],
+        start: _Node | None = None,
+        base: str | None = None,
+    ) -> str:
+        """Multi-version xpath union: versions are mutually exclusive
+        within one document, so first-match == coalesce (SURVEY P2)."""
+        exprs = [self.scalar_sql(p, start, base) for p in paths]
         if len(exprs) == 1:
             return exprs[0]
         return f"coalesce({', '.join(exprs)})"
 
-    def _any_present_sql(self, xpaths: list[str]) -> str:
-        return "(" + " OR ".join(self._presence_sql(x) for x in xpaths) + ")"
+    def any_present_sql(self, xpaths: list[str]) -> str:
+        return "(" + " OR ".join(self.presence_sql(x) for x in xpaths) + ")"
 
-    def _collapsed_matches_sql(self, xpaths: list[str], sep: str = " ") -> str:
-        empty = "CAST(array() AS ARRAY<STRING>)"
-        arrs = ", ".join(
-            f"coalesce({self._matches_array_sql(x)}, {empty})" for x in xpaths
-        )
-        sep_lit = "'" + sep.replace("'", "''") + "'"
-        return f"nullif(array_join(concat({arrs}), {sep_lit}), '')"
-
-    def coalesce_scalar(self, xpaths: list[str]) -> Column:
-        """Multi-version xpath union: versions are mutually exclusive
-        within one document, so first-match == coalesce (SURVEY P2)."""
-        return F.expr(self._coalesce_scalar_sql(xpaths))
-
-    def any_present(self, xpaths: list[str]) -> Column:
-        return F.expr(self._any_present_sql(xpaths))
-
-    def collapsed_matches(self, xpaths: list[str], sep: str = " ") -> Column:
+    def collapsed_matches_sql(self, xpaths: list[str], sep: str = " ") -> str:
         """paste(collapse=sep) across all matches of all versions.
 
         Each version's match array is coalesced to [] first — concat
         over arrays is NULL if ANY argument is NULL, and absent versions
         parse to NULL arrays."""
-        return F.expr(self._collapsed_matches_sql(xpaths, sep))
+        empty = "CAST(array() AS ARRAY<STRING>)"
+        arrs = ", ".join(
+            f"coalesce({self.matches_sql(x)}, {empty})" for x in xpaths
+        )
+        return f"nullif(array_join(concat({arrs}), {sql_str(sep)}), '')"

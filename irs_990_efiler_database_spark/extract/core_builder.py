@@ -33,17 +33,18 @@ artifacts the engine should not reproduce):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..plans.concordance import load_core_spec
 from ..sources.xml_source import build_return_schema
-from .compiler import ExprCompiler
-
-
-def _sq(s: str) -> str:
-    """SQL single-quoted string literal."""
-    return "'" + s.replace("'", "''") + "'"
+from .compiler import (
+    NUM_LEAF_SUFFIXES,
+    ExprCompiler,
+    aliased,
+    leaf_names,
+    sql_str,
+    typed_sql,
+)
 
 
 def _apply_rule_sql(x: str, rule: str | None, formtype: str) -> str:
@@ -71,7 +72,7 @@ def compile_core_sql(c: ExprCompiler, xml_col: str = "xml") -> dict[str, str]:
     vars_ = spec["vars"]
 
     # FORMTYPE gates the zero rules and the conditional sums; compile first.
-    formtype = c._coalesce_scalar_sql(vars_["FORMTYPE"]["xpaths"])
+    formtype = c.coalesce_sql(vars_["FORMTYPE"]["xpaths"])
 
     exprs: dict[str, str] = {}
 
@@ -80,14 +81,14 @@ def compile_core_sql(c: ExprCompiler, xml_col: str = "xml") -> dict[str, str]:
         if s.get("kind") != "scalar":
             continue
         if s.get("collapse") == " ":
-            x = c._collapsed_matches_sql(s["xpaths"], " ")
+            x = c.collapsed_matches_sql(s["xpaths"], " ")
         elif "recode_present" in s:
             x = (
-                f"CASE WHEN {c._any_present_sql(s['xpaths'])} "
-                f"THEN {_sq(s['recode_present'])} END"
+                f"CASE WHEN {c.any_present_sql(s['xpaths'])} "
+                f"THEN {sql_str(s['recode_present'])} END"
             )
         else:
-            x = c._coalesce_scalar_sql(s["xpaths"])
+            x = c.coalesce_sql(s["xpaths"])
         exprs[var] = _apply_rule_sql(x, s.get("rule"), formtype)
 
     # pass 2: derived variables referencing pass-1 expressions
@@ -101,21 +102,21 @@ def compile_core_sql(c: ExprCompiler, xml_col: str = "xml") -> dict[str, str]:
                 f"coalesce({_num_sql(exprs[v])}, 0)" for v in s["pc_components"]
             )
             pc = f"CAST((0 + {total}) AS STRING)"
-            ez = c._coalesce_scalar_sql(s["ez_xpaths"])
+            ez = c.coalesce_sql(s["ez_xpaths"])
             x = f"CASE WHEN {formtype} = '990' THEN {pc} ELSE {ez} END"
             exprs[var] = _apply_rule_sql(x, s.get("rule"), formtype)
         elif kind == "sum_with_fallback":
             comps = [exprs[v] for v in s["pc_components"]]
             all_null = " AND ".join(f"({x} IS NULL)" for x in comps)
             total = " + ".join(f"coalesce({_num_sql(x)}, 0)" for x in comps)
-            ez = c._coalesce_scalar_sql(s["ez_xpaths"])
+            ez = c.coalesce_sql(s["ez_xpaths"])
             x = (
                 f"CASE WHEN {all_null} THEN {ez} "
                 f"ELSE CAST((0 + {total}) AS STRING) END"
             )
             exprs[var] = _apply_rule_sql(x, s.get("rule"), formtype)
         elif kind == "schedule_flag":
-            exprs[var] = f"contains(`{xml_col}`, {_sq(s['schedule'])})"
+            exprs[var] = f"contains(`{xml_col}`, {sql_str(s['schedule'])})"
         elif kind == "url":
             exprs[var] = "`url`"
         elif kind == "object_id_from_url":
@@ -123,13 +124,6 @@ def compile_core_sql(c: ExprCompiler, xml_col: str = "xml") -> dict[str, str]:
     return exprs
 
 
-def compile_core_columns(c: ExprCompiler, xml_col: str = "xml") -> dict[str, Column]:
-    """Column view of ``compile_core_sql`` (one F.expr per variable) —
-    for builders that need individual header columns (Schedule N)."""
-    return {v: F.expr(x) for v, x in compile_core_sql(c, xml_col).items()}
-
-
-_NUM_LEAF_SUFFIXES = ("Amt", "Cnt", "Nbr", "Qty")
 _DATE_LEAF_SUFFIXES = ("Dt", "Date")
 
 
@@ -149,8 +143,8 @@ def core_type_map() -> dict[str, str]:
             continue
         if kind != "scalar" or "recode_present" in s or s.get("collapse"):
             continue
-        leaves = [xp.rstrip("/").rsplit("/", 1)[-1] for xp in s.get("xpaths", [])]
-        if any(lf.endswith(_NUM_LEAF_SUFFIXES) for lf in leaves):
+        leaves = leaf_names(s.get("xpaths", []))
+        if any(lf.endswith(NUM_LEAF_SUFFIXES) for lf in leaves):
             out[var] = "long"
         elif any(lf.endswith(_DATE_LEAF_SUFFIXES) for lf in leaves):
             out[var] = "date"
@@ -178,14 +172,7 @@ def build_core(
     spec = load_core_spec()
     cols = spec["columns"] if columns is None else columns
     if typed:
-        # try_cast: ANSI mode would otherwise abort the whole build on
-        # one unparseable amount/date; NULL-degrade matches as.numeric
         tmap = core_type_map()
-        exprs = {
-            v: (f"try_cast({x} AS {tmap[v]})" if v in tmap else x)
-            for v, x in exprs.items()
-        }
+        exprs = {v: typed_sql(x, tmap.get(v)) for v, x in exprs.items()}
     # ONE py4j crossing for the whole 237-column projection
-    return returns.selectExpr(
-        *[f"{exprs[v]} AS `{v}`" for v in cols]
-    )
+    return returns.selectExpr(*aliased((v, exprs[v]) for v in cols))

@@ -20,8 +20,7 @@ OBJECT_ID, EIN, NAME, TAXYR, FORMTYPE, URL (:269-270).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..plans.concordance import (
     concrete_groups,
@@ -29,75 +28,116 @@ from ..plans.concordance import (
     schedule_guard,
     table_rows,
 )
-from ..plans.xml_schema import resolve_child
 from ..sources.xml_source import build_return_schema
-from .compiler import ExprCompiler
+from .compiler import (
+    NUM_LEAF_SUFFIXES,
+    ExprCompiler,
+    aliased,
+    leaf_names,
+    sql_str,
+    typed_sql,
+)
 
-KEY_COLS = ("OBJECT_ID", "EIN", "NAME", "TAXYR", "FORMTYPE", "URL")
-
-
-def _key_exprs(c: ExprCompiler) -> list[Column]:
+def _key_exprs(c: ExprCompiler) -> dict[str, str]:
+    """The six denormalized key columns, in output order."""
     core = load_core_spec()["vars"]
-    return [
-        F.col("object_id").alias("OBJECT_ID"),
-        c.coalesce_scalar(core["EIN"]["xpaths"]).alias("EIN"),
-        c.coalesce_scalar(core["NAME"]["xpaths"]).alias("NAME"),
-        c.coalesce_scalar(core["FISYR"]["xpaths"]).alias("TAXYR"),
-        c.coalesce_scalar(core["FORMTYPE"]["xpaths"]).alias("FORMTYPE"),
-        F.col("url").alias("URL"),
-    ]
+    return {
+        "OBJECT_ID": "`object_id`",
+        "EIN": c.coalesce_sql(core["EIN"]["xpaths"]),
+        "NAME": c.coalesce_sql(core["NAME"]["xpaths"]),
+        "TAXYR": c.coalesce_sql(core["FISYR"]["xpaths"]),
+        "FORMTYPE": c.coalesce_sql(core["FORMTYPE"]["xpaths"]),
+        "URL": "`url`",
+    }
 
 
-_INT_SUFFIXES = ("Amt", "Cnt", "Nbr", "Qty")
-
-
-def _typed(
-    col: Column, data_type: str, typed: bool, leaves: tuple[str, ...] = ()
-) -> Column:
-    """Typed-mode cast (SURVEY §1.3 upgrade): concordance ``numeric``
-    splits by XSD leaf convention — Amt/Cnt/Nbr are integral, the rest
-    (hours, rates: AverageHoursPerWeek '40.0') are double.
-
-    ``try_cast``, not ``cast``: under Spark 4's default ANSI mode a
-    plain cast THROWS on any filing whose field doesn't parse (stray
-    text in an Amt, malformed date), failing the whole build; try_cast
-    degrades the one value to NULL — the reference's as.numeric
-    coercion semantics."""
-    if not typed:
-        return col
+def _spark_type(data_type: str, leaves: tuple[str, ...]) -> str | None:
+    """Typed-mode Spark type of a concordance variable: ``numeric``
+    splits by XSD leaf convention — Amt/Cnt/Nbr/Qty are integral, the
+    rest (hours, rates: AverageHoursPerWeek '40.0') are double;
+    ``boolean`` is the checkbox recode; everything else stays string."""
     if data_type == "numeric":
-        if any(lf.endswith(_INT_SUFFIXES) for lf in leaves):
-            return col.try_cast("long")
-        return col.try_cast("double")
+        if any(lf.endswith(NUM_LEAF_SUFFIXES) for lf in leaves):
+            return "long"
+        return "double"
     if data_type == "boolean":
-        return F.when(col.isNull(), F.lit(None).cast("boolean")).otherwise(
-            col.isin("X", "1", "true")
-        )
-    return col
+        return "boolean"
+    return None
 
 
 def one_table_columns(
     c: ExprCompiler, ones: list[dict], typed: bool = False
-) -> list[Column]:
-    """The ONE-cardinality column list (multi-version coalesce per
-    variable, P2 semantics) — shared by ``build_rdb_table`` and the
-    full-master value fuzz (tests/test_master_fuzz.py), so the fuzz
-    exercises the identical compile path the production builder uses."""
+) -> list[str]:
+    """The ONE-cardinality ``selectExpr`` items (multi-version coalesce
+    per variable, P2 semantics, aliased to the variable) — shared by
+    ``build_rdb_table`` and the full-master value fuzz
+    (tests/test_master_fuzz.py), so the fuzz exercises the identical
+    compile path the production builder uses."""
     by_var: dict[str, dict] = {}
     for r in ones:
         v = by_var.setdefault(
             r["variable"], {"xpaths": [], "data_type": r["data_type"]}
         )
         v["xpaths"].append(r["xpath"])
-    return [
-        _typed(
-            c.coalesce_scalar(s["xpaths"]),
-            s["data_type"],
-            typed,
-            tuple(x.rstrip("/").rsplit("/", 1)[-1] for x in s["xpaths"]),
-        ).alias(var)
-        for var, s in by_var.items()
-    ]
+    cols: dict[str, str] = {}
+    for var, s in by_var.items():
+        t = _spark_type(s["data_type"], leaf_names(s["xpaths"])) if typed else None
+        cols[var] = typed_sql(c.coalesce_sql(s["xpaths"]), t)
+    return aliased(cols.items())
+
+
+def explode_groups(
+    src: DataFrame,
+    c: ExprCompiler,
+    keys: dict[str, str],
+    groups: dict[str, dict[str, list[str]]],
+    types: dict[str, str | None],
+) -> DataFrame:
+    """One frame per repeating group, unioned by name in group order
+    (NULL-fill for variables a group doesn't carry — the reference's
+    ragged bind_rows, :5109-5122).
+
+    ``groups``: group-root xpath → {variable: member rel-paths};
+    ``types``: variable → typed-mode Spark type (None: string). Each
+    frame is two ``selectExpr`` projections: the keys plus
+    ``explode(<root>) AS _g``, then the keys plus every variable
+    compiled from the group node over ``_g``. One variable may have
+    several XSD-version rel-paths inside the same group
+    (BusinessNameLine1 vs BusinessNameLine1Txt); they coalesce, the
+    same multi-version P2 semantics as document scalars (reference
+    pipe-union, :332-336). A rel-path that crosses an INNER repeated
+    element (a node another registered table declares as a group root
+    — e.g. LiquidationDetail inside LiquidationTable) takes the FIRST
+    match in document order — the golden's _find_rel semantics.
+
+    A group whose only member is the empty rel-path diverges at the
+    leaf itself (e.g. the SCHED-O checkbox variants): one row per
+    present leaf, no explode."""
+    key_items = aliased(keys.items())
+    frames: list[DataFrame] = []
+    for gp, by_var in groups.items():
+        if list(by_var.values()) == [[""]]:
+            (var,) = by_var
+            x = typed_sql(c.scalar_sql(gp), types[var])
+            frames.append(
+                src.filter(c.presence_sql(gp)).selectExpr(
+                    *key_items, *aliased([(var, x)])
+                )
+            )
+            continue
+        gsql, gnode = c.group(gp)
+        exploded = src.selectExpr(*key_items, f"explode({gsql}) AS _g")
+        members = (
+            (var, typed_sql(c.coalesce_sql(rels, gnode, "`_g`"), types[var]))
+            for var, rels in by_var.items()
+        )
+        frames.append(
+            exploded.selectExpr(*[f"`{k}`" for k in keys], *aliased(members))
+        )
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f, allowMissingColumns=True)
+    return out
 
 
 def build_rdb_table(
@@ -133,7 +173,7 @@ def build_rdb_table(
     # theirs (IRS990ScheduleA, IRS990PF, …), body tables don't gate
     member = schedule_guard(rows)
     src = (
-        returns.filter(F.col("xml").contains(member))
+        returns.filter(f"contains(`xml`, {sql_str(member)})")
         if member is not None
         else returns
     )
@@ -142,94 +182,26 @@ def build_rdb_table(
     manys = [r for r in rows if r["cardinality"] == "MANY"]
 
     if ones and not manys:
-        return src.select(*keys, *one_table_columns(c, ones, typed))
+        return src.selectExpr(
+            *aliased(keys.items()), *one_table_columns(c, ones, typed)
+        )
 
     # MANY: explode each concrete repeating element, map leaves →
-    # variables, union by name (NULL-fill for leaves a version doesn't
-    # carry — the reference's ragged bind_rows, :5109-5122)
+    # variables, union by name
     typemap = {r["variable"]: r["data_type"] for r in manys}
+    by_group: dict[str, dict[str, list[str]]] = {}
+    all_rels: dict[str, list[str]] = {}
+    for gp, leaves in concrete_groups(manys).items():
+        by_var = by_group[gp] = {}
+        for rel, var in leaves.items():
+            by_var.setdefault(var, []).append(rel)
+            all_rels.setdefault(var, []).append(rel)
     # type each variable from its GLOBAL leaf set (all XSD versions in
     # all groups): per-group typing would give the same variable long
     # in one frame and double in another, and the ragged union would
     # silently widen — the typed schema must not depend on group order
-    groups = concrete_groups(manys)
-    global_leaves: dict[str, tuple[str, ...]] = {}
-    for leaves in groups.values():
-        for rel, var in leaves.items():
-            lf = rel.rsplit("/", 1)[-1] if rel else ""
-            global_leaves[var] = (*global_leaves.get(var, ()), lf)
-    frames: list[DataFrame] = []
-    for gp, leaves in groups.items():
-        real_group = any(rel for rel in leaves)
-        if not real_group:
-            # divergence at the leaf itself (e.g. the SCHED-O checkbox
-            # variants): one row per present leaf, no explode
-            var = next(iter(leaves.values()))
-            frames.append(
-                src.filter(c.presence(gp)).select(
-                    *keys, _typed(c.scalar(gp), typemap[var], typed).alias(var)
-                )
-            )
-            continue
-        gcol, depth, _ = c._walk(gp)
-        for _ in range(depth - 1):
-            gcol = F.flatten(gcol)
-        exploded = src.select(*keys, F.explode(gcol).alias("_g"))
-        gnode = builder.node_at(gp)
-        # One variable may have several XSD-version leaf names inside the
-        # same repeating group (BusinessNameLine1 vs BusinessNameLine1Txt)
-        # — group rel-paths by variable and coalesce the member accesses,
-        # the same multi-version P2 semantics as coalesce_scalar
-        # (reference pipe-union, :332-336).
-        by_var: dict[str, list[str]] = {}
-        for rel, var in leaves.items():
-            by_var.setdefault(var, []).append(rel)
-        cols = []
-        for var, rels in by_var.items():
-            members = []
-            for rel in rels:
-                col: Column = F.col("_g")
-                # a rel path may cross an INNER repeated element (a
-                # node another registered table declares as a group
-                # root — e.g. LiquidationDetail inside this table's
-                # LiquidationTable): each such crossing wraps the
-                # member access in one array level. Collapse to the
-                # FIRST match in document order (flatten nested
-                # levels, then element 1) — the golden's _find_rel
-                # semantics. Found by the r13 derived-catalog fuzz
-                # registering all 227 MANY slices together.
-                node = gnode
-                inner_arrays = 0
-                for seg in rel.split("/"):
-                    col = col[seg]
-                    node = (
-                        resolve_child(node, seg)
-                        if node is not None
-                        else None
-                    )
-                    if node is not None and node.repeated:
-                        inner_arrays += 1
-                        if inner_arrays >= 2:
-                            # same one-open-array rule as the
-                            # compiler's _walk_sql: field extraction
-                            # never resolves over array<array<...>>
-                            col = F.flatten(F.array_compact(col))
-                            inner_arrays = 1
-                if inner_arrays:
-                    # null-safe first match (ANSI element_at throws on
-                    # an empty array; get() returns NULL) — instances
-                    # without the member are skipped, exactly the
-                    # golden _find_rel's missing-element semantics
-                    col = F.get(F.array_compact(col), 0)
-                members.append(col)
-            merged = members[0] if len(members) == 1 else F.coalesce(*members)
-            cols.append(
-                _typed(
-                    merged, typemap[var], typed, global_leaves[var]
-                ).alias(var)
-            )
-        frames.append(exploded.select(*[F.col(k) for k in KEY_COLS], *cols))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
+    types = {
+        var: _spark_type(typemap[var], leaf_names(rels)) if typed else None
+        for var, rels in all_rels.items()
+    }
+    return explode_groups(src, c, keys, by_group, types)

@@ -20,64 +20,41 @@ is derived from the master concordance crosswalk).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..plans.concordance import load_schedn_spec
 from ..sources.xml_source import build_return_schema
-from .compiler import ExprCompiler
-from .core_builder import compile_core_columns
+from .compiler import ExprCompiler, aliased
+from .core_builder import compile_core_sql
+from .rdb_builder import explode_groups
 
 
 def schedn_table_names() -> list[str]:
     return sorted(load_schedn_spec()["tables"])
 
 
-def _header_exprs(c: ExprCompiler) -> list[Column]:
-    spec = load_schedn_spec()
-    core = compile_core_columns(c)
-    return [core[v].alias(v) for v in spec["header"]]
-
-
-def _rel_col(rel: str) -> Column:
-    col: Column = F.col("_g")
-    for seg in rel.split("/"):
-        col = col[seg]
-    return col
-
-
 def build_schedn_table(returns: DataFrame, table_name: str) -> DataFrame:
-    """returns (url, xml, doc, object_id) → the named SCHED-N table."""
+    """returns (url, xml, doc, object_id) → the named SCHED-N table: a
+    spec adapter over the rdb builder's group explode."""
     spec = load_schedn_spec()
     t = spec["tables"][table_name]
     _, builder = build_return_schema()
     c = ExprCompiler(builder)
-    header = _header_exprs(c)
-    header_names = list(spec["header"])
+    core = compile_core_sql(c)
+    header = {v: core[v] for v in spec["header"]}
 
     # if (SCHEDN) guard (:2881): grepl on the serialized doc
-    src = returns.filter(F.col("xml").contains("IRS990ScheduleN"))
+    src = returns.filter("contains(`xml`, 'IRS990ScheduleN')")
 
     if t["cardinality"] == "ONE":
-        cols = [
-            c.coalesce_scalar(t["vars"][v]["xpaths"]).alias(v)
-            for v in t["columns"]
-        ]
-        return src.select(*header, *cols)
+        cols = {v: c.coalesce_sql(t["vars"][v]["xpaths"]) for v in t["columns"]}
+        return src.selectExpr(*aliased(header.items()), *aliased(cols.items()))
 
-    frames: list[DataFrame] = []
-    for gp in t["groups"]:
-        gcol, depth, _ = c._walk(gp)
-        for _ in range(depth - 1):
-            gcol = F.flatten(gcol)
-        exploded = src.select(*header, F.explode(gcol).alias("_g"))
-        cols = []
-        for v in t["columns"]:
-            members = [_rel_col(rel) for rel in t["vars"][v]["rels"]]
-            merged = members[0] if len(members) == 1 else F.coalesce(*members)
-            cols.append(merged.alias(v))
-        frames.append(exploded.select(*[F.col(h) for h in header_names], *cols))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
+    members = {v: t["vars"][v]["rels"] for v in t["columns"]}
+    return explode_groups(
+        src,
+        c,
+        header,
+        {gp: members for gp in t["groups"]},
+        dict.fromkeys(members),
+    )

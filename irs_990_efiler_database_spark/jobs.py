@@ -33,6 +33,7 @@ from .sinks import read_table, write_csv, write_dead_letter, write_table
 from .sources.index import filter_index
 from .sources.xml_source import (
     _bundle_columnar_batch_size,
+    bundle_footers,
     read_return_bundle,
     read_return_xml_files,
     split_corrupt,
@@ -100,36 +101,23 @@ _OVERLAP_SERIAL_BYTES = 8 << 30
 
 def _bundle_uncompressed_ratio(bundle_path: str) -> float | None:
     """Uncompressed/compressed ratio from LOCAL part-file parquet
-    footers (same footers `_bundle_columnar_batch_size` reads); None
-    when no local footer is readable (object store) — the on-disk
-    size then stands as a LOWER bound on uncompressed.
+    footers (``sources.xml_source.bundle_footers``, shared with
+    ``_bundle_columnar_batch_size``); None when no local footer is
+    readable (object store) — the on-disk size then stands as a LOWER
+    bound on uncompressed.
 
-    Globs recursively so partitioned layouts (year=*/part-*.parquet)
-    get a footer ratio too, and samples up to three part files
+    Samples up to three part files
     (first/middle/last in sorted order) summing raw and compressed
     bytes across the sample — a byte-weighted ratio — so one
     unrepresentative part file can't swing the 8 GiB overlap/serial
     decision on a heterogeneous bundle."""
-    import glob as _glob
-
     try:
-        import pyarrow.parquet as pq
-
-        base = bundle_path.rstrip("/")
-        parts = (
-            sorted(_glob.glob(f"{base}/part-*.parquet"))
-            or sorted(_glob.glob(f"{base}/*.parquet"))
-            or sorted(
-                _glob.glob(f"{base}/**/part-*.parquet", recursive=True)
-            )
-            or sorted(_glob.glob(f"{base}/**/*.parquet", recursive=True))
+        footers = bundle_footers(
+            bundle_path,
+            lambda parts: sorted({parts[0], parts[len(parts) // 2], parts[-1]}),
         )
-        if not parts:
-            return None
-        sample = sorted({parts[0], parts[len(parts) // 2], parts[-1]})
         raw = comp = 0
-        for path in sample:
-            meta = pq.ParquetFile(path).metadata
+        for meta in footers:
             for g in range(meta.num_row_groups):
                 rg = meta.row_group(g)
                 raw += rg.total_byte_size

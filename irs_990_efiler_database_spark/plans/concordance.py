@@ -72,7 +72,7 @@ def _infer_type(xpaths: list[str]) -> str:
     if any(lf.endswith(_NUM_SUFFIXES) for lf in leaves):
         return "numeric"
     if all(lf.endswith(_BOOL_SUFFIXES) for lf in leaves):
-        # "boolean" is the type name rdb_builder._typed recodes
+        # "boolean" is the type name extract.compiler.typed_sql recodes
         # (X/1/true → true) — master slices must match the per-table
         # concordance checkbox semantics in typed builds
         return "boolean"

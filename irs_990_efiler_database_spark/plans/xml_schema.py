@@ -45,38 +45,41 @@ def _strip(xpath: str) -> list[str]:
     return parts
 
 
-def _child(node: _Node, part: str) -> _Node:
-    """Child lookup that MERGES case-variant sibling names into the
-    first-seen casing. Spark resolves struct members case-insensitively
-    (spark.sql.caseSensitive=false) and from_xml matches elements the
-    same way, so two sibling fields differing only in case are (a) an
-    AMBIGUOUS_REFERENCE_TO_FIELDS analysis error and (b) redundant —
-    both vintages' values land in one field anyway. The master
-    crosswalk carries exactly one such pair (IRS990PF Part VI:
+def resolve_child(node: _Node, part: str) -> "tuple[str, _Node] | None":
+    """Child lookup → (canonical child name, child), None when absent.
+
+    Exact match first, then a case-variant sibling, which resolves to
+    the FIRST-seen casing. Spark resolves struct members
+    case-insensitively (spark.sql.caseSensitive=false) and from_xml
+    matches elements the same way, so two sibling fields differing only
+    in case are (a) an AMBIGUOUS_REFERENCE_TO_FIELDS analysis error and
+    (b) redundant — both vintages' values land in one field anyway. The
+    master crosswalk carries exactly one such pair (IRS990PF Part VI:
     AppliedToESTaxAmt pre-rename vs AppliedToEsTaxAmt; found by the
     full-master value fuzz — registering both locations crashed
-    build_rdb_table at analysis)."""
+    build_rdb_table at analysis). A pruned copy of the trie must reuse
+    the canonical name so case-variant siblings stay merged."""
     hit = node.children.get(part)
     if hit is not None:
-        return hit
-    low = part.lower()
-    for name, ch in node.children.items():
-        if name.lower() == low:
-            return ch
-    return node.children.setdefault(part, _Node())
-
-
-def resolve_child(node: _Node, part: str) -> "_Node | None":
-    """Read-side twin of ``_child``: exact match first, case-variant
-    sibling on a miss, None when absent (no insertion)."""
-    hit = node.children.get(part)
-    if hit is not None:
-        return hit
+        return part, hit
     low = part.lower()
     return next(
-        (ch for name, ch in node.children.items() if name.lower() == low),
+        (
+            (name, ch)
+            for name, ch in node.children.items()
+            if name.lower() == low
+        ),
         None,
     )
+
+
+def _child(node: _Node, part: str) -> _Node:
+    """Write-side lookup: the resolved (case-merged) child, inserted
+    under *part* when absent."""
+    hit = resolve_child(node, part)
+    if hit is not None:
+        return hit[1]
+    return node.children.setdefault(part, _Node())
 
 
 class XmlSchemaBuilder:
@@ -130,36 +133,15 @@ class XmlSchemaBuilder:
         ]
         return T.StructType(fields)
 
-    # -- resolution helpers (used by the expression compiler) ----------
+    # -- trie lookup ----------------------------------------------------
 
     def node_at(self, xpath: str) -> _Node | None:
         node = self.root
         for part in _strip(xpath):
             if part.startswith("@"):
                 return node if part[1:] in node.attrs else None
-            node = resolve_child(node, part)
-            if node is None:
+            hit = resolve_child(node, part)
+            if hit is None:
                 return None
+            node = hit[1]
         return node
-
-    def field_path(self, xpath: str) -> tuple[str, str]:
-        """Return (dotted field path, kind) for an xpath.
-
-        kind: 'attr'   → path ends at ``_<attr>`` member
-              'value'  → element is a struct, text is its _VALUE member
-              'text'   → plain string leaf
-              'struct' → element is a struct with no _VALUE (presence only)
-        """
-        parts = _strip(xpath)
-        if parts and parts[-1].startswith("@"):
-            attr = parts[-1][1:]
-            elem = parts[:-1]
-            return ".".join([*elem, ATTR_PREFIX + attr]), "attr"
-        node = self.node_at(xpath)
-        if node is None:
-            raise KeyError(f"xpath not in schema: {xpath}")
-        if node.children or node.attrs:
-            if node.is_leaf or (node.attrs and not node.children):
-                return ".".join([*parts, VALUE_TAG]), "value"
-            return ".".join(parts), "struct"
-        return ".".join(parts), "text"

@@ -28,6 +28,22 @@ def _cpus() -> int:
     return os.cpu_count() or 4
 
 
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Default local-mode driver heap: about half of physical memory
+    (``MemTotal``). The rest covers the JVM's off-heap use and the
+    Python workers; a heap larger than the host lets the JVM delay GC
+    until the kernel OOM-killer ends it. 4g where ``/proc/meminfo``
+    cannot be read (non-Linux hosts)."""
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{max(1024, int(line.split()[1]) // 2048)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "4g"
+
+
 def get_spark(
     app_name: str = "irs-990-efiler-spark",
     master: str | None = None,
@@ -37,7 +53,9 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     In local mode one JVM hosts everything, so ``spark.driver.memory`` is
-    the only memory knob; on a cluster the same configs apply per executor.
+    the only memory knob: ``SPARK_GRAFT_DRIVER_MEM``, else about half of
+    the host's memory (:func:`_default_driver_mem`). On a cluster the
+    same configs apply per executor.
     """
     cpus = _cpus()
     builder = (
@@ -73,7 +91,10 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -21,6 +21,7 @@ case with the identical downstream plan.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,7 +36,7 @@ from ..plans.concordance import (
     master_table_names,
     table_rows,
 )
-from ..plans.xml_schema import XmlSchemaBuilder, _strip
+from ..plans.xml_schema import XmlSchemaBuilder, _strip, resolve_child
 
 # Leaves the reference space-collapses (multi-match paste(collapse=" "),
 # :527-528, :1515) — these repeat within one document.
@@ -125,11 +126,13 @@ def build_return_schema() -> tuple[T.StructType, XmlSchemaBuilder]:
 
 CORRUPT_COL = "_corrupt_record"
 
-# scoped-schema cache: (tables tuple) -> (full-builder identity, result).
-# Keyed on the full builder object so register_master_table's
-# build_return_schema.cache_clear() implicitly invalidates the scoped
-# derivations too (a fresh full builder never compares identical).
-_SCOPED_CACHE: dict[tuple[str, ...], tuple[int, tuple]] = {}
+# scoped-schema cache: (tables tuple) -> (full builder, result). An
+# entry is valid only while its builder IS the current superset builder,
+# so register_master_table's build_return_schema.cache_clear()
+# invalidates the scoped derivations too. The entry holds the builder
+# itself: an id() could be reused by a fresh builder once the old one
+# is freed, which would serve a stale pruned trie.
+_SCOPED_CACHE: dict[tuple[str, ...], tuple[XmlSchemaBuilder, tuple]] = {}
 
 
 def scoped_return_schema(
@@ -149,14 +152,16 @@ def scoped_return_schema(
     and attributes — so the ExprCompiler resolves every shared xpath to
     the identical kind/field path and the extracted VALUES are
     bit-identical to the superset parse (asserted row-for-row in
-    tests/test_extract_990.py). This is schema/metadata work only: the
+    tests/test_extract_990.py, and checked here per kept xpath: the
+    compiler walk must give the same SQL and kind over both tries, or
+    this raises). This is schema/metadata work only: the
     same documents are parsed, just into the fields the table actually
     reads — the same contract as column pruning on a parquet scan."""
     from ..plans.concordance import load_core_spec, table_rows
 
     full_schema, full = build_return_schema()
     hit = _SCOPED_CACHE.get(tables)
-    if hit is not None and hit[0] == id(full):
+    if hit is not None and hit[0] is full:
         return hit[1]
 
     xpaths: list[str] = []
@@ -178,7 +183,7 @@ def scoped_return_schema(
         src = full.root
         dst = b.root
         for seg in parts:
-            nxt = resolve_child_name(src, seg)
+            nxt = resolve_child(src, seg)
             if nxt is None:  # not in the superset: nothing to copy
                 break
             name, src = nxt
@@ -191,6 +196,16 @@ def scoped_return_schema(
             child.repeated = src.repeated
             child.attrs |= src.attrs
             dst = child
+    from ..extract.compiler import ExprCompiler
+
+    scoped, superset = ExprCompiler(b), ExprCompiler(full)
+    for xp in xpaths:
+        got, want = _walk_or_none(scoped, xp), _walk_or_none(superset, xp)
+        if got != want:
+            raise RuntimeError(
+                f"scoped schema for {tables} resolves {xp!r} to {got}, "
+                f"the superset to {want}"
+            )
     result = (
         T.StructType(
             list(b.build().fields)
@@ -198,26 +213,16 @@ def scoped_return_schema(
         ),
         b,
     )
-    _SCOPED_CACHE[tables] = (id(full), result)
+    _SCOPED_CACHE[tables] = (full, result)
     return result
 
 
-def resolve_child_name(node, part):
-    """Like ``plans.xml_schema.resolve_child`` but returns the
-    (canonical child name, child) pair — the pruned copy must reuse the
-    superset's first-seen casing so case-variant siblings stay merged."""
-    hit = node.children.get(part)
-    if hit is not None:
-        return part, hit
-    low = part.lower()
-    return next(
-        (
-            (name, ch)
-            for name, ch in node.children.items()
-            if name.lower() == low
-        ),
-        None,
-    )
+def _walk_or_none(c, xpath: str) -> tuple[str, int, str] | None:
+    """The compiler walk of *xpath*, None when it is not in the trie."""
+    try:
+        return c.walk(xpath)
+    except KeyError:
+        return None
 
 
 def with_parsed_return(
@@ -234,7 +239,7 @@ def with_parsed_return(
 
     ``scope_tables``: parse with the PRUNED schema covering just those
     tables (see :func:`scoped_return_schema`) — pair with
-    ``build_rdb_table(..., scope=...)`` so compile and parse share one
+    ``build_rdb_table(..., scoped=True)`` so compile and parse share one
     trie."""
     if scope_tables is not None:
         parse_schema, _ = scoped_return_schema(tuple(scope_tables))
@@ -302,6 +307,32 @@ def read_return_xml_files(
     return with_parsed_return(raw, scope_tables=scope_tables)
 
 
+def bundle_footers(
+    bundle_path: str, sample: Callable[[list[str]], list[str]]
+) -> list:
+    """Parquet footers (pyarrow ``FileMetaData``) of a sample of a
+    bundle's LOCAL part files; ``sample`` picks from the sorted part
+    list. Empty when no local part file exists (object store).
+
+    The glob cascade prefers ``part-*.parquet`` at the top level, then
+    any top-level parquet file, then nested layouts: a landing dir of
+    bundle SUBDIRECTORIES (drop-N/part-*.parquet) or a partitioned
+    bundle (year=*/part-*.parquet) — the callers' measurements are
+    layout-independent, so the sample must be too."""
+    import glob as _glob
+
+    import pyarrow.parquet as pq
+
+    base = bundle_path.rstrip("/")
+    parts = (
+        sorted(_glob.glob(f"{base}/part-*.parquet"))
+        or sorted(_glob.glob(f"{base}/*.parquet"))
+        or sorted(_glob.glob(f"{base}/**/part-*.parquet", recursive=True))
+        or sorted(_glob.glob(f"{base}/**/*.parquet", recursive=True))
+    )
+    return [pq.ParquetFile(p).metadata for p in sample(parts)] if parts else []
+
+
 def _bundle_columnar_batch_size(bundle_path: str) -> int | None:
     """Adaptive vectorized-reader batch size for LARGE-cell bundles.
 
@@ -314,27 +345,11 @@ def _bundle_columnar_batch_size(bundle_path: str) -> int | None:
     bytes per batch from the first local part-file's footer
     (uncompressed size / rows); None = footer unreadable (object
     store / layout change) = leave Spark's default alone."""
-    import glob as _glob
-
     try:
-        import pyarrow.parquet as pq
-
-        base = bundle_path.rstrip("/")
-        parts = (
-            sorted(_glob.glob(f"{base}/part-*.parquet"))
-            or sorted(_glob.glob(f"{base}/*.parquet"))
-            # nested layouts: a landing dir of bundle SUBDIRECTORIES
-            # (drop-N/part-*.parquet) or a partitioned bundle — the
-            # large-cell OOM is layout-independent, so the measurement
-            # must be too
-            or sorted(
-                _glob.glob(f"{base}/**/part-*.parquet", recursive=True)
-            )
-            or sorted(_glob.glob(f"{base}/**/*.parquet", recursive=True))
-        )
-        if not parts:
+        footers = bundle_footers(bundle_path, lambda parts: parts[:1])
+        if not footers:
             return None
-        meta = pq.ParquetFile(parts[0]).metadata
+        meta = footers[0]
         rows = meta.num_rows
         raw = sum(
             meta.row_group(g).total_byte_size

@@ -43,8 +43,8 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    from irs_990_efiler_database_spark.session import get_spark
+    from irs_990_efiler_database_spark.session import _cpus, get_spark
 
-    s = get_spark("tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark("tests", master=f"local[{_cpus()}]", shuffle_partitions=8)
     yield s
     s.stop()

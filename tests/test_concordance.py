@@ -130,7 +130,7 @@ def test_master_slice_multiversion_coalesce_values(spark):
 
 def test_master_typed_checkbox_becomes_boolean(spark):
     """_infer_type labels all-Ind/Checkbox master variables 'boolean' —
-    the type name _typed recodes (X/1/true → true) — so typed-mode
+    the type name typed_sql recodes (X/1/true → true) — so typed-mode
     master slices match per-table concordance checkbox semantics
     (ADVICE r5: 'checkbox' silently fell through as raw text)."""
     from irs_990_efiler_database_spark.extract.golden import fixtures_dir

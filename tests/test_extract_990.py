@@ -372,3 +372,43 @@ def test_scoped_schema_prunes_and_preserves_flags():
     scoped_node = sb.node_at(gp)
     if full_node is not None and scoped_node is not None:
         assert scoped_node.repeated == full_node.repeated
+
+
+def test_scoped_schema_cache_follows_registration():
+    """The scoped-schema cache must never outlive the superset builder
+    it was pruned from: a master table registered between two scoped
+    calls for the SAME table set re-marks a node as repeated, and the
+    second pruned schema must carry that array shape (a stale entry
+    would parse the group as a struct and silently drop instances)."""
+    from pyspark.sql import types as T
+
+    from irs_990_efiler_database_spark.plans.concordance import (
+        _MASTER_TABLES,
+        register_catalog_many_table,
+        register_master_table,
+    )
+    from irs_990_efiler_database_spark.sources.xml_source import (
+        build_return_schema,
+        scoped_return_schema,
+    )
+
+    def root_type(schema):
+        ez = schema["ReturnData"].dataType["IRS990EZ"].dataType
+        return ez["CashSavingsAndInvestmentsGrp"].dataType
+
+    saved = dict(_MASTER_TABLES)
+    try:
+        name = register_master_table(
+            "F990-EZ-PART-02", table_name="SCOPED-CACHE-ONE"
+        )
+        first, _ = scoped_return_schema((name,))
+        assert isinstance(root_type(first), T.StructType)
+        register_catalog_many_table(
+            "F990-EZ-PART-02", table_name="SCOPED-CACHE-MANY"
+        )
+        second, _ = scoped_return_schema((name,))
+        assert isinstance(root_type(second), T.ArrayType)
+    finally:
+        _MASTER_TABLES.clear()
+        _MASTER_TABLES.update(saved)
+        build_return_schema.cache_clear()

@@ -279,6 +279,28 @@ def test_s3a_config_contract(spark, monkeypatch):
     assert hconf.get("fs.s3a.committer.name") == "magic"
 
 
+def test_default_driver_heap_fits_the_host(tmp_path):
+    """The default ``spark.driver.memory`` is derived from the host's
+    MemTotal (about half): a 15 GB host must never get a heap larger
+    than itself (the old fixed 48g default got the test JVM
+    OOM-killed on such a host)."""
+    import re
+
+    from irs_990_efiler_database_spark.session import _default_driver_mem
+
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text(
+        "MemTotal:       15728640 kB\nMemFree:         1048576 kB\n"
+    )
+    heap = _default_driver_mem(str(meminfo))
+    m = re.fullmatch(r"(\d+)([mg])", heap)
+    assert m, heap
+    mib = int(m.group(1)) * (1024 if m.group(2) == "g" else 1)
+    assert 1024 <= mib <= 15 * 1024, heap
+    assert mib >= 7 * 1024, heap  # about half, not a token heap
+    assert _default_driver_mem(str(tmp_path / "missing")) == "4g"
+
+
 def test_simple_stream_reader_exactly_once(spark, tmp_path):
     """The SimpleDataSourceStreamReader path (.option("simple","true")
     routes through pyspark's streamReader->simpleStreamReader fallback):

@@ -226,6 +226,8 @@ def test_master_many_slices_match_golden(spark, tmp_path):
 
 @pytest.mark.slow
 def test_every_master_arm_value_matches_golden(spark, tmp_path, all_registered):
+    from pyspark.sql import functions as F
+
     from irs_990_efiler_database_spark.extract.compiler import ExprCompiler
     from irs_990_efiler_database_spark.extract.golden import golden_rdb_rows
     from irs_990_efiler_database_spark.extract.rdb_builder import (
@@ -284,13 +286,11 @@ def test_every_master_arm_value_matches_golden(spark, tmp_path, all_registered):
             loc_cols = one_table_columns(c, rows)
             for col, (var, xps) in zip(loc_cols, by_var.items()):
                 alias = f"{loc}::{var}"
-                cols.append(col.alias(alias))
+                cols.append(F.expr(col).alias(alias))
                 owners[alias] = (loc, var)
                 for xp in xps:
                     xp_owner.setdefault(xp, set()).add(alias)
         df = read_return_xml_files(spark, str(cdir / "*.xml"))
-        from pyspark.sql import functions as F
-
         got = {
             r["url"]: r.asDict()
             for r in df.select(F.col("url"), *cols).collect()
@@ -331,7 +331,7 @@ def test_every_master_arm_value_matches_golden(spark, tmp_path, all_registered):
 
 def _ref_cast(wv, dtype: str):
     """Reference cast of a golden STRING value to the Spark dtype the
-    typed select produced — the Python mirror of _typed's try_cast /
+    typed select produced — the Python mirror of typed_sql's try_cast /
     boolean-recode semantics on the fuzz corpus's value universe
     (digit strings): an unparseable value degrades to NULL, never
     raises (the reference's as.numeric coercion)."""
@@ -372,10 +372,12 @@ def test_every_master_arm_value_matches_golden_typed(
       cast that mangles, reorders, or nulls a parseable value diverges."""
     from pyspark.sql import functions as F
 
-    from irs_990_efiler_database_spark.extract.compiler import ExprCompiler
+    from irs_990_efiler_database_spark.extract.compiler import (
+        NUM_LEAF_SUFFIXES,
+        ExprCompiler,
+    )
     from irs_990_efiler_database_spark.extract.golden import golden_rdb_rows
     from irs_990_efiler_database_spark.extract.rdb_builder import (
-        _INT_SUFFIXES,
         one_table_columns,
     )
     from irs_990_efiler_database_spark.plans.concordance import table_rows
@@ -431,7 +433,7 @@ def test_every_master_arm_value_matches_golden_typed(
                 one_table_columns(c, rows, typed=True), by_var.items()
             ):
                 alias = f"{loc}::{var}"
-                cols.append(col.alias(alias))
+                cols.append(F.expr(col).alias(alias))
                 meta[alias] = (
                     s["dt"],
                     tuple(
@@ -445,7 +447,7 @@ def test_every_master_arm_value_matches_golden_typed(
             if dt == "numeric":
                 want_t = (
                     "bigint"
-                    if any(lf.endswith(_INT_SUFFIXES) for lf in leaves)
+                    if any(lf.endswith(NUM_LEAF_SUFFIXES) for lf in leaves)
                     else "double"
                 )
             elif dt == "boolean":
@@ -481,7 +483,7 @@ def test_master_coalesce_precedence_matches_golden(
 ):
     """Arm-ORDER differential: a doc carrying ALL arms of a multi-arm
     variable (3,170 such variables) must coalesce to the same value in
-    the engine (coalesce_scalar over the compiled struct) and the
+    the engine (coalesce_sql over the compiled struct) and the
     golden (_coalesce over ElementTree) — the single-arm fuzz cannot
     see precedence divergence because only one arm is ever present."""
     from irs_990_efiler_database_spark.extract.compiler import ExprCompiler
@@ -545,7 +547,7 @@ def test_master_coalesce_precedence_matches_golden(
                 one_table_columns(c, rows), by_var.items()
             ):
                 alias = f"{loc}::{var}"
-                cols.append(col.alias(alias))
+                cols.append(F.expr(col).alias(alias))
                 var_xps[alias] = xps
         df = read_return_xml_files(spark, str(cdir / "*.xml"))
         got = {

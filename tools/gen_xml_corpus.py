@@ -460,7 +460,7 @@ def gen_master_coalesce_docs(
     with ALL of its arms populated at once (distinct values per arm).
     The single-arm fuzz (gen_master_arm_docs) proves each arm wires to
     the right column; it cannot see arm-ORDER divergence between the
-    engine's coalesce_scalar and the golden's _coalesce when several
+    engine's coalesce_sql and the golden's _coalesce when several
     vintages coexist in one document — 3,170 master variables carry
     >=2 arms. Returns location -> [(url, xml, variable)]."""
     import sys as _sys
