@@ -5,6 +5,9 @@
 
 One parameterized job: scan XML → PERMISSIVE parse → all output tables
 off ONE cached parse → partitioned idempotent writes + dead-letter.
+Both builds run the same per-batch write step (``_write_batch``):
+``build_database`` once over the whole source, and
+``build_database_incremental`` once per streaming micro-batch.
 What the reference does with a 3M-iteration driver loop, manual chunking
 into ~1000 parts, try()/redo lists, and per-chunk RDS files is here:
 
@@ -18,11 +21,12 @@ into ~1000 parts, try()/redo lists, and per-chunk RDS files is here:
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import StreamingQueryException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
 
 from .extract.core_builder import build_core
@@ -32,10 +36,9 @@ from .plans.concordance import load_core_spec, master_table_names, table_names
 from .sinks import read_table, write_csv, write_dead_letter, write_table
 from .sources.index import filter_index
 from .sources.xml_source import (
-    _bundle_columnar_batch_size,
-    bundle_footers,
     read_return_bundle,
     read_return_xml_files,
+    set_reader_batch_size,
     split_corrupt,
     with_parsed_return,
 )
@@ -86,104 +89,127 @@ def _default_tables() -> list[str]:
     )
 
 
-# above this UNCOMPRESSED source size, auto write_concurrency
-# serializes table writes: the r12 overlap A/B measured 2.05x at
-# 46 MB, 1.31x at a 1.1 GB filing year, 0.88x at the 15.4 GB
-# realistic corpus — all in raw (uncompressed) XML cell bytes, the
-# unit that governs the parse/write volume. 8 GiB sits safely past
-# every measured win and below the measured loss. NOTE the unit: the
-# 15.4 GB corpus is only ~1 GB on disk (snappy ~16x on the narrative
-# text), so an on-disk threshold would never fire for the exact
-# corpus that measured the loss — bundle estimates are rescaled to
-# uncompressed via the first part-file's footer ratio below.
-_OVERLAP_SERIAL_BYTES = 8 << 30
+# write tasks per table: extraction tables are DIMENSION-sized next to
+# the raw XML (a few hundred columns, one row per filing), so writing
+# them at the parse's partition count fans out tiny files and pays the
+# per-task commit latency once per partition and table — measured 3x
+# end to end on the 2000-doc build (10.0 → 3.3 s). coalesce (not
+# repartition) keeps the write shuffle-free
+_WRITE_TASKS = 8
 
 
-def _bundle_uncompressed_ratio(bundle_path: str) -> float | None:
-    """Uncompressed/compressed ratio from LOCAL part-file parquet
-    footers (``sources.xml_source.bundle_footers``, shared with
-    ``_bundle_columnar_batch_size``); None when no local footer is
-    readable (object store) — the on-disk size then stands as a LOWER
-    bound on uncompressed.
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether *path* exists, asked through the Hadoop FS API (local,
+    S3A, HDFS) like ``sources.xml_source.expand_glob``."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    return jpath.getFileSystem(hconf).exists(jpath)
 
-    Samples up to three part files
-    (first/middle/last in sorted order) summing raw and compressed
-    bytes across the sample — a byte-weighted ratio — so one
-    unrepresentative part file can't swing the 8 GiB overlap/serial
-    decision on a heterogeneous bundle."""
+
+def _write_batch(
+    returns: DataFrame,
+    out_dir: str,
+    tables: list[str],
+    builders: dict[str, tuple],
+    result: BuildResult,
+    batch_id: int | None = None,
+    csv: bool = False,
+) -> None:
+    """The one per-batch write step of both builds: the parsed
+    *returns* → every table in *tables* + the dead letters, with this
+    batch's paths and counts added to *result*.
+
+    The parse is persisted ONCE, before ``split_corrupt``, so the
+    tables and the dead letters all read the cached parse (the XML is
+    parsed once per batch). Table writes are independent jobs over
+    that cache (distinct output paths; the BlockManager's
+    per-partition locks make concurrent cache fills compute each
+    parse partition once), submitted to one pool so their fixed
+    job-setup/commit latency overlaps. Each table is coalesced to
+    ``_WRITE_TASKS`` write tasks and its rows are counted DURING the
+    write (``Observation``), not by a second scan.
+
+    ``batch_id`` (micro-batches) adds the ``_batch`` column. Every
+    write partitions by ``(*table partitions, "_batch")`` and
+    ``write_table`` drops partition columns the frame lacks, so the
+    batch build writes without it and a retried micro-batch replaces
+    only its own ``_batch`` partitions.
+
+    An empty partitioned write leaves no schema on disk, so an empty
+    table is written as one zero-row unpartitioned file — but only
+    when the table path did not exist before: an unpartitioned
+    overwrite is STATIC and would delete every earlier partition.
+
+    On the first failed table the queued writes are cancelled, the
+    running ones drain, and ONE ``RuntimeError`` names the failed and
+    the completed tables (raised after the pool has quiesced, so the
+    unpersist never races a live job)."""
+    out = out_dir.rstrip("/")
+    spark = returns.sparkSession
+
+    def tag(df: DataFrame) -> DataFrame:
+        return df if batch_id is None else df.withColumn("_batch", F.lit(batch_id))
+
+    returns = returns.persist()
     try:
-        footers = bundle_footers(
-            bundle_path,
-            lambda parts: sorted({parts[0], parts[len(parts) // 2], parts[-1]}),
-        )
-        raw = comp = 0
-        for meta in footers:
-            for g in range(meta.num_row_groups):
-                rg = meta.row_group(g)
-                raw += rg.total_byte_size
-                for c in range(rg.num_columns):
-                    comp += rg.column(c).total_compressed_size
-        return raw / comp if comp > 0 else None
-    except Exception:  # noqa: BLE001
-        return None
+        ok, dead = split_corrupt(returns)
 
+        def write_one(name: str) -> tuple[str, int]:
+            build, part_cols = builders[name]
+            df = tag(build(ok)).coalesce(_WRITE_TASKS)
+            path = f"{out}/{name}"
+            existed = _exists(spark, path)
+            obs = Observation()
+            write_table(
+                df.observe(obs, F.count(F.lit(1)).alias("n")),
+                path,
+                partition_by=(*part_cols, "_batch"),
+            )
+            n = int(obs.get["n"])
+            if n == 0 and not existed:
+                write_table(df, path, partition_by=None)
+            if csv:
+                write_csv(df, f"{path}-csv")
+            return path, n
 
-def _estimate_input_bytes(
-    spark: SparkSession,
-    xml_glob: str | list[str] | None,
-    bundle_path: str | None,
-) -> int | None:
-    """Best-effort UNCOMPRESSED size of the build source. Raw-XML glob
-    matches are already uncompressed — their Hadoop-FS sizes (local,
-    S3A, HDFS; directories summed recursively) are used directly. A
-    parquet bundle's on-disk size is rescaled by the footer-measured
-    compression ratio when a local footer is readable; otherwise the
-    on-disk size stands as a lower bound (errs toward overlap, whose
-    loss case is bounded). None when the filesystem cannot answer —
-    callers must treat None as "unknown", not "small"."""
-    try:
-        sc = spark.sparkContext
-        jvm = sc._jvm
-        hconf = sc._jsc.hadoopConfiguration()
+        # submit + as_completed (not ex.map): one table's failure must
+        # not propagate while sibling writes are mid-flight
+        done: dict[str, tuple[str, int]] = {}
+        failures: dict[str, Exception] = {}
+        with ThreadPoolExecutor(min(8, len(tables)) or 1) as ex:
+            futs = {ex.submit(write_one, name): name for name in tables}
+            for fut in as_completed(futs):
+                if fut.cancelled():
+                    # a QUEUED sibling cancelled after the first failure
+                    # never ran; reporting it would bury the root cause
+                    continue
+                try:
+                    done[futs[fut]] = fut.result()
+                except Exception as e:  # noqa: BLE001 — attributed below
+                    failures[futs[fut]] = e
+                    for other in futs:
+                        other.cancel()
+        if failures:
+            detail = "; ".join(
+                f"{t}: {type(e).__name__}: {e}" for t, e in sorted(failures.items())
+            )
+            completed = ", ".join(sorted(done)) or "none"
+            raise RuntimeError(
+                f"build failed for table(s) [{detail}] — completed tables "
+                f"({completed}) are written and idempotently re-buildable"
+            ) from next(iter(failures.values()))
+        for name in tables:
+            path, n = done[name]
+            result.tables[name] = path
+            result.rows[name] = result.rows.get(name, 0) + n
 
-        if bundle_path is not None:
-            jpath = jvm.org.apache.hadoop.fs.Path(bundle_path)
-            fs = jpath.getFileSystem(hconf)
-            disk = fs.getContentSummary(jpath).getLength()
-            ratio = _bundle_uncompressed_ratio(bundle_path)
-            return int(disk * ratio) if ratio is not None else disk
-        total = 0
-        globs = [xml_glob] if isinstance(xml_glob, str) else list(xml_glob)
-        matched = False
-        for g in globs:
-            jpath = jvm.org.apache.hadoop.fs.Path(g)
-            fs = jpath.getFileSystem(hconf)
-            statuses = fs.globStatus(jpath)
-            if statuses is None:
-                continue
-            for s in statuses:
-                matched = True
-                total += (
-                    s.getLen()
-                    if s.isFile()
-                    else fs.getContentSummary(s.getPath()).getLength()
-                )
-        return total if matched else None
-    except Exception:  # noqa: BLE001 — any FS failure means "unknown"
-        return None
-
-
-def _auto_write_concurrency(est_bytes: int | None, n_tables: int) -> int:
-    """Size-adaptive default for ``build_database(write_concurrency=
-    None)``: serialize once the source is big enough that per-table
-    writes are bandwidth-bound (overlap then only adds commit-path
-    contention — measured 0.88x at 15.4 GB uncompressed), overlap the
-    fixed job-setup/commit latency below that (measured 2.05x at
-    small sizes). Unknown size keeps the overlap default: the loss
-    case is bounded (-12% measured) while the win case is >2x."""
-    if est_bytes is not None and est_bytes >= _OVERLAP_SERIAL_BYTES:
-        return 1
-    return min(8, n_tables or 1)
+        n_dead = dead.count()
+        if n_dead:
+            result.dead_letter_path = f"{out}/DEAD-LETTER"
+            write_dead_letter(tag(dead), result.dead_letter_path)
+            result.dead_rows += n_dead
+    finally:
+        returns.unpersist()
 
 
 def build_database(
@@ -196,50 +222,18 @@ def build_database(
     form_types: tuple[str, ...] | None = None,
     tables: list[str] | None = None,
     csv: bool = False,
-    write_partitions: int | None = 8,
-    write_concurrency: int | None = None,
 ) -> BuildResult:
-    """Run the full build: source → parse → N tables → sinks.
+    """Run the full build: source → parse → N tables → sinks, as ONE
+    call of the per-batch write step (:func:`_write_batch`) over the
+    whole source.
 
     ``index``: optional built index; when given, only documents whose
     ObjectId appears in the (years/form_types-filtered) index are
     processed — the reference's pre-fetch subsetting (:4958) as a
     broadcast semi-join.
-
-    ``write_partitions``: coalesce each output table to this many
-    write tasks (None = inherit the parse partitioning). Extraction
-    tables are DIMENSION-sized relative to the raw XML (a few hundred
-    columns × one row per filing), so writing them at the parse's
-    partition count fans out tiny files and pays per-task commit
-    latency × #partitions × #tables — measured 3× end-to-end on the
-    2000-doc build (10.0 → 3.3 s). On a cluster, size it so output
-    files land near the rowgroup sweet spot (~128 MB); coalesce (not
-    repartition) keeps the write shuffle-free, at the cost of capping
-    the extraction projection's parallelism at the same count —
-    acceptable because extraction over the cached parse is cheap and
-    N tables write concurrently.
-
-    ``write_concurrency``: cap on concurrently submitted table writes.
-    1 serializes the writes — the A/B knob tools/extract_scale.py uses
-    to measure what the overlap is worth at a given corpus size. None
-    (the default) is size-adaptive: overlap pays when per-table writes
-    are LATENCY-dominated and stops paying once they are
-    bandwidth-bound (measured r12 A/B: 2.05x at a 20k-doc build,
-    1.31x at a 1.1 GB filing year, 0.88x — a net loss — at a 15.4 GB
-    realistic corpus), so auto mode serializes when the source
-    exceeds ~8 GiB UNCOMPRESSED (raw-XML globs measured directly via
-    Hadoop FS — local, S3A, HDFS; parquet bundles rescaled from
-    on-disk size by the footer compression ratio) and otherwise
-    overlaps at min(8, #tables); an unstatable source keeps the
-    overlap default (see :func:`_auto_write_concurrency`).
     """
     if (xml_glob is None) == (bundle_path is None):
         raise ValueError("exactly one of xml_glob / bundle_path required")
-    if write_concurrency is not None and write_concurrency < 1:
-        raise ValueError(
-            "write_concurrency must be >= 1 (or None for the "
-            f"auto default), got {write_concurrency}"
-        )
     builders = _all_builders()
     selected = tables if tables is not None else _default_tables()
     # auto-register BEFORE the source read: a requested table that is
@@ -288,95 +282,9 @@ def build_database(
         ).select(F.col("ObjectId").alias("object_id"))
         returns = returns.join(F.broadcast(wanted), "object_id", "left_semi")
 
-    ok, dead = split_corrupt(returns)
-    ok = ok.persist()
-    try:
-        result = BuildResult()
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.sql import Observation
-
-        def write_one(name: str) -> tuple[str, str, int]:
-            build, part_cols = builders[name]
-            df = build(ok)
-            if write_partitions:
-                df = df.coalesce(write_partitions)
-            path = f"{out_dir.rstrip('/')}/{name}"
-            # count DURING the write (Observation) instead of a second
-            # scan per table; an empty partitioned write leaves no
-            # schema on disk, so the (rare, cheap) empty case rewrites
-            # unpartitioned to stay readable
-            obs = Observation()
-            write_table(
-                df.observe(obs, F.count(F.lit(1)).alias("n")),
-                path,
-                partition_by=part_cols,
-            )
-            n = int(obs.get["n"])
-            if n == 0:
-                write_table(df, path, partition_by=None)
-            if csv:
-                write_csv(df, f"{path}-csv")
-            return name, path, n
-
-        # per-table writes are independent jobs over the ONE cached
-        # parse (distinct output paths; the BlockManager's per-partition
-        # locks make concurrent cache fills compute each parse partition
-        # once) — submitting them concurrently overlaps their fixed
-        # job-setup/commit latency, the dominant cost of small builds;
-        # on a real cluster it also keeps executors fed between commits
-        # submit + as_completed (not ex.map): one table's failure must
-        # not propagate while sibling writes are mid-flight — collect
-        # per-table errors, cancel not-yet-started writes, let running
-        # ones drain, then raise ONE attributed error after the pool
-        # has fully quiesced (so the finally-unpersist never races a
-        # live job)
-        from concurrent.futures import as_completed
-
-        failures: dict[str, Exception] = {}
-        workers = (
-            write_concurrency
-            if write_concurrency is not None
-            else _auto_write_concurrency(
-                _estimate_input_bytes(spark, xml_glob, bundle_path),
-                len(selected),
-            )
-        )
-        with ThreadPoolExecutor(max_workers=workers) as ex:
-            futs = {ex.submit(write_one, name): name for name in selected}
-            for fut in as_completed(futs):
-                if fut.cancelled():
-                    # a QUEUED sibling we cancelled after the first
-                    # failure — it never ran; reporting it as failed
-                    # would bury the root cause in CancelledError noise
-                    continue
-                try:
-                    name, path, n = fut.result()
-                except Exception as e:  # noqa: BLE001 — attributed below
-                    failures[futs[fut]] = e
-                    for other in futs:
-                        other.cancel()
-                else:
-                    result.tables[name] = path
-                    result.rows[name] = n
-        if failures:
-            detail = "; ".join(
-                f"{t}: {type(e).__name__}: {e}" for t, e in sorted(failures.items())
-            )
-            done = ", ".join(sorted(result.tables)) or "none"
-            raise RuntimeError(
-                f"build failed for table(s) [{detail}] — completed tables "
-                f"({done}) are written and idempotently re-buildable"
-            ) from next(iter(failures.values()))
-
-        dl_path = f"{out_dir.rstrip('/')}/DEAD-LETTER"
-        result.dead_rows = dead.count()
-        if result.dead_rows:
-            write_dead_letter(dead, dl_path)
-            result.dead_letter_path = dl_path
-        return result
-    finally:
-        ok.unpersist()
+    result = BuildResult()
+    _write_batch(returns, out_dir, selected, builders, result, csv=csv)
+    return result
 
 
 def build_database_incremental(
@@ -397,61 +305,43 @@ def build_database_incremental(
     unseen bundles — the checkpoint's source log is the reference's
     chunk/redo bookkeeping, done by the engine.
 
-    Exactly-once: each micro-batch is ONE parse feeding all tables
-    (``foreachBatch``), and every table write is partitioned by
-    ``(*table_partitions, _batch)`` with dynamic partition overwrite —
-    a retried batch atomically replaces its own ``_batch`` partitions
-    instead of appending duplicates. Read the result with
+    Exactly-once: each micro-batch runs the batch build's per-batch
+    write step (:func:`_write_batch`, from ``foreachBatch``) — ONE
+    parse feeding all tables — with its batch id, so every table write
+    is partitioned by ``(*table_partitions, _batch)`` with dynamic
+    partition overwrite: a retried batch atomically replaces its own
+    ``_batch`` partitions instead of appending duplicates. Read the result with
     ``read_incremental_table`` (drops the bookkeeping column).
 
     ``rows``/``dead_rows`` count documents processed by THIS run (a
     catch-up run over an already-current landing dir reports 0).
     """
-    from pyspark.sql import Observation
-
     builders = _all_builders()
     selected = tables if tables is not None else _default_tables()
     out = out_dir.rstrip("/")
     result = BuildResult()
     for name in selected:
         result.tables[name] = f"{out}/{name}"
+    failed: list[RuntimeError] = []
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        ok, dead = split_corrupt(with_parsed_return(batch))
-        ok = ok.persist()
         try:
-            for name in selected:
-                build, part_cols = builders[name]
-                df = build(ok).withColumn("_batch", F.lit(batch_id))
-                obs = Observation()
-                write_table(
-                    df.observe(obs, F.count(F.lit(1)).alias("n")),
-                    result.tables[name],
-                    partition_by=(*part_cols, "_batch"),
-                )
-                result.rows[name] = result.rows.get(name, 0) + int(obs.get["n"])
-            dl = dead.withColumn("_batch", F.lit(batch_id)).withColumn(
-                "captured_at", F.current_timestamp()
+            _write_batch(
+                with_parsed_return(batch),
+                out,
+                selected,
+                builders,
+                result,
+                batch_id=batch_id,
             )
-            n_dead = dl.count()
-            if n_dead:
-                result.dead_letter_path = f"{out}/DEAD-LETTER"
-                write_table(dl, result.dead_letter_path, partition_by=("_batch",))
-                result.dead_rows += n_dead
-        finally:
-            ok.unpersist()
+        except RuntimeError as e:
+            failed.append(e)
+            raise
 
     # the streaming file source uses the SAME vectorized parquet reader
     # as the batch path, so a realistic-size landing bundle (150 KB
-    # cells) would re-introduce the r12 OOM (4096-row batches x cell
-    # bytes x concurrent scan tasks) if the batch-size fix stayed
-    # confined to read_return_bundle — size it from the landing dir's
-    # measured row width before the stream starts (VERDICT r12 #5)
-    batch_size = _bundle_columnar_batch_size(landing_dir)
-    if batch_size is not None:
-        spark.conf.set(
-            "spark.sql.parquet.columnarReaderBatchSize", batch_size
-        )
+    # cells) needs the same adaptive batch size (VERDICT r12 #5)
+    set_reader_batch_size(spark, landing_dir)
     reader = spark.readStream.schema(BUNDLE_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -462,7 +352,14 @@ def build_database_incremental(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    except StreamingQueryException:
+        # the query wraps the batch's error; raise the step's own
+        # attributed error instead
+        if failed:
+            raise failed[0]
+        raise
     return result
 
 

@@ -73,15 +73,22 @@ def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
 
 def write_dead_letter(dead: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Dead-letter sink (FAIL_LIST.csv analog, :5096-5101): parquet of
-    (url, xml, reason, captured_at) for replay.
+    (url, xml, reason, captured_at) for replay, written by
+    :func:`write_table` partitioned by ``_batch``.
 
-    Default is overwrite-per-run so the DEAD-LETTER table honors the
-    same idempotent-restart guarantee as the data tables (a re-run of
-    build_database must not accumulate duplicate dead rows); pass
-    mode='append' to accumulate across distinct corpora instead."""
-    dead.withColumn("captured_at", F.current_timestamp()).write.mode(
-        mode
-    ).parquet(path)
+    A frame without ``_batch`` (the batch build, ``fetch_to_bundle``)
+    is written unpartitioned, overwrite-per-run, so the DEAD-LETTER
+    table honors the same idempotent-restart guarantee as the data
+    tables (a re-run of build_database must not accumulate duplicate
+    dead rows); pass mode='append' to accumulate across distinct
+    corpora instead. A streaming micro-batch's frame carries
+    ``_batch``, so a retried batch replaces only its own partition."""
+    write_table(
+        dead.withColumn("captured_at", F.current_timestamp()),
+        path,
+        partition_by=("_batch",),
+        mode=mode,
+    )
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:

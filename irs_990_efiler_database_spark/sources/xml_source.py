@@ -21,7 +21,6 @@ case with the identical downstream plan.
 
 from __future__ import annotations
 
-from collections.abc import Callable
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
@@ -307,32 +306,6 @@ def read_return_xml_files(
     return with_parsed_return(raw, scope_tables=scope_tables)
 
 
-def bundle_footers(
-    bundle_path: str, sample: Callable[[list[str]], list[str]]
-) -> list:
-    """Parquet footers (pyarrow ``FileMetaData``) of a sample of a
-    bundle's LOCAL part files; ``sample`` picks from the sorted part
-    list. Empty when no local part file exists (object store).
-
-    The glob cascade prefers ``part-*.parquet`` at the top level, then
-    any top-level parquet file, then nested layouts: a landing dir of
-    bundle SUBDIRECTORIES (drop-N/part-*.parquet) or a partitioned
-    bundle (year=*/part-*.parquet) — the callers' measurements are
-    layout-independent, so the sample must be too."""
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    base = bundle_path.rstrip("/")
-    parts = (
-        sorted(_glob.glob(f"{base}/part-*.parquet"))
-        or sorted(_glob.glob(f"{base}/*.parquet"))
-        or sorted(_glob.glob(f"{base}/**/part-*.parquet", recursive=True))
-        or sorted(_glob.glob(f"{base}/**/*.parquet", recursive=True))
-    )
-    return [pq.ParquetFile(p).metadata for p in sample(parts)] if parts else []
-
-
 def _bundle_columnar_batch_size(bundle_path: str) -> int | None:
     """Adaptive vectorized-reader batch size for LARGE-cell bundles.
 
@@ -342,14 +315,30 @@ def _bundle_columnar_batch_size(bundle_path: str) -> int | None:
     per task — 32 concurrent scan tasks OOM a 128 GB heap before the
     parse even starts (measured r12: "Cannot reserve additional
     contiguous bytes (requested 441126829)"). Target ~32 MB of cell
-    bytes per batch from the first local part-file's footer
-    (uncompressed size / rows); None = footer unreadable (object
-    store / layout change) = leave Spark's default alone."""
+    bytes per batch from the first LOCAL part-file's footer
+    (uncompressed size / rows); None = no readable local footer
+    (object store / layout change) = leave Spark's default alone.
+
+    The glob cascade prefers ``part-*.parquet`` at the top level, then
+    any top-level parquet file, then nested layouts: a landing dir of
+    bundle SUBDIRECTORIES (drop-N/part-*.parquet) or a partitioned
+    bundle (year=*/part-*.parquet) — the measurement is
+    layout-independent, so the sample must be too."""
+    import glob as _glob
+
+    import pyarrow.parquet as pq
+
+    base = bundle_path.rstrip("/")
     try:
-        footers = bundle_footers(bundle_path, lambda parts: parts[:1])
-        if not footers:
+        for pattern in (
+            "part-*.parquet", "*.parquet", "**/part-*.parquet", "**/*.parquet"
+        ):
+            parts = sorted(_glob.glob(f"{base}/{pattern}", recursive=True))
+            if parts:
+                break
+        else:
             return None
-        meta = footers[0]
+        meta = pq.ParquetFile(parts[0]).metadata
         rows = meta.num_rows
         raw = sum(
             meta.row_group(g).total_byte_size
@@ -363,17 +352,24 @@ def _bundle_columnar_batch_size(bundle_path: str) -> int | None:
         return None
 
 
-def read_return_bundle(spark: SparkSession, bundle_path: str) -> DataFrame:
-    """Scale source: parquet bundles of (url, xml). Sets the session's
-    vectorized-reader batch size from the bundle's measured row width
-    (see :func:`_bundle_columnar_batch_size`) — the conf is consulted
-    at scan execution, and the build jobs execute their reads promptly,
-    so the adaptive value governs this bundle's scan."""
+def set_reader_batch_size(spark: SparkSession, bundle_path: str) -> None:
+    """Set the session's vectorized-reader batch size from the bundle's
+    measured row width (see :func:`_bundle_columnar_batch_size`); an
+    unmeasurable bundle leaves the conf alone. Always set when measured
+    (4096 restores the default after a large-cell bundle shrank it
+    earlier in the session). The conf is consulted at scan execution,
+    so it governs the scans the caller runs next."""
     batch = _bundle_columnar_batch_size(bundle_path)
     if batch is not None:
-        # always set (4096 restores the default after a large-cell
-        # bundle shrank it earlier in the session)
         spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", batch)
+
+
+def read_return_bundle(spark: SparkSession, bundle_path: str) -> DataFrame:
+    """Scale source: parquet bundles of (url, xml), read with the
+    bundle's adaptive reader batch size (:func:`set_reader_batch_size`)
+    — the build jobs execute their reads promptly, so the adaptive
+    value governs this bundle's scan."""
+    set_reader_batch_size(spark, bundle_path)
     return with_parsed_return(spark.read.parquet(bundle_path))
 
 

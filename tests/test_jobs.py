@@ -1208,35 +1208,6 @@ def test_gen_bundle_distributed_parity_and_dirty_corpus(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_build_database_write_concurrency_serial_matches(spark, tmp_path):
-    """write_concurrency=1 (the extract_scale A/B knob) produces the
-    identical per-table row counts as the default overlapped writes."""
-    from tools.gen_xml_corpus import gen_bundle
-
-    from irs_990_efiler_database_spark.jobs import build_database
-
-    b = tmp_path / "bundle"
-    gen_bundle(spark, str(b), 60, partitions=4)
-    r1 = build_database(spark, str(tmp_path / "o1"), bundle_path=str(b))
-    r2 = build_database(
-        spark, str(tmp_path / "o2"), bundle_path=str(b), write_concurrency=1
-    )
-    assert r1.rows == r2.rows and r1.dead_rows == r2.dead_rows == 0
-    # invalid explicit concurrency is a clear argument error, not an
-    # opaque ThreadPoolExecutor ValueError (ADVICE r11)
-    import pytest
-
-    for bad in (0, -3):
-        with pytest.raises(ValueError, match="write_concurrency"):
-            build_database(
-                spark,
-                str(tmp_path / "o3"),
-                bundle_path=str(b),
-                write_concurrency=bad,
-            )
-
-
-@pytest.mark.slow
 def test_realistic_size_corpus_inflates_and_extracts(spark, tmp_path):
     """gen_bundle(realistic_size=True) (VERDICT r11 #1): every doc
     lands in the 50-250 KB band real filings occupy, the added bytes
@@ -1305,6 +1276,18 @@ def test_bundle_columnar_batch_size_adapts_to_cell_width(spark, tmp_path):
     # ~32 MB / ~144 KB-per-row ≈ low hundreds; must be well under 4096
     assert 64 <= b < 1024
 
+    # a partitioned layout (year=*/part-*.parquet) of the same part
+    # files samples the same first file, so it sizes the batch the same
+    import shutil
+    from pathlib import Path
+
+    for year, part in zip(
+        (2019, 2020), sorted(Path(big).glob("part-*.parquet"))
+    ):
+        (tmp_path / "parted" / f"year={year}").mkdir(parents=True)
+        shutil.copy(part, tmp_path / "parted" / f"year={year}" / part.name)
+    assert _bundle_columnar_batch_size(str(tmp_path / "parted")) == b
+
     # nonexistent path: leave Spark's conf alone
     assert _bundle_columnar_batch_size(str(tmp_path / "nope")) is None
 
@@ -1322,87 +1305,112 @@ def test_bundle_columnar_batch_size_adapts_to_cell_width(spark, tmp_path):
     )
 
 
-def test_auto_write_concurrency_is_size_adaptive(spark, tmp_path):
-    """r12 overlap A/B follow-through: auto write_concurrency overlaps
-    latency-dominated (small) builds and serializes bandwidth-bound
-    (multi-GB) ones; unknown source size keeps the overlap default
-    (loss case is bounded, win case is >2x)."""
-    from irs_990_efiler_database_spark.jobs import (
-        _OVERLAP_SERIAL_BYTES,
-        _auto_write_concurrency,
-        _estimate_input_bytes,
+def _plan_nodes(plan) -> list:
+    """A physical plan's nodes, without the plans a node only embeds
+    (an InMemoryTableScan's cached plan is not walked)."""
+    kids = plan.children()
+    return [plan] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
+    ]
+
+
+def test_dead_letters_read_the_cached_parse(spark, tmp_path, monkeypatch):
+    """The dead-letter frame reads the persisted parse: counting and
+    writing it must not run from_xml over every document again."""
+    from irs_990_efiler_database_spark import jobs
+
+    captured = []
+    real = jobs.write_dead_letter
+
+    def capture(dead, path, *a, **kw):
+        captured.append(dead._jdf.queryExecution().executedPlan())
+        real(dead, path, *a, **kw)
+
+    monkeypatch.setattr(jobs, "write_dead_letter", capture)
+    res = jobs.build_database(
+        spark, str(tmp_path / "out"), xml_glob=GLOBS, tables=["CORE"]
     )
-    from tools.gen_xml_corpus import gen_bundle
+    assert res.dead_rows == 1 and len(captured) == 1
+    nodes = [n.simpleString(1000) for n in _plan_nodes(captured[0])]
+    assert any(n.startswith("InMemoryTableScan") for n in nodes), nodes
+    assert not any("from_xml" in n for n in nodes), nodes
 
-    # decision table (uncompressed source bytes)
-    assert _auto_write_concurrency(None, 13) == 8
-    assert _auto_write_concurrency(46 << 20, 13) == 8
-    # the 1.1 GB filing year measured a 1.31x overlap WIN — must overlap
-    assert _auto_write_concurrency(1100 << 20, 13) == 8
-    assert _auto_write_concurrency(_OVERLAP_SERIAL_BYTES, 13) == 1
-    # the 15.4 GB realistic corpus measured the 0.88x loss — serialize
-    assert _auto_write_concurrency(15_400 << 20, 13) == 1
-    assert _auto_write_concurrency(1 << 20, 0) == 1  # no tables -> 1
 
-    # bundle estimate: Hadoop-FS on-disk sum RESCALED to uncompressed
-    # by the footer ratio — the 15.4 GB realistic corpus is ~1 GB on
-    # disk (snappy ~16x), so on-disk bytes are the wrong unit
-    from irs_990_efiler_database_spark.jobs import (
-        _bundle_uncompressed_ratio,
+def test_empty_table_keeps_earlier_partitions(spark, tmp_path):
+    """A table that comes out empty must not wipe what earlier builds
+    wrote to it: only one fixture has Schedule J, so rebuilding from
+    another one leaves SJ-P02-T01-COMPENSATION empty, and the first
+    build's Schedule J rows must survive."""
+    out = str(tmp_path / "out")
+    tables = ["CORE", "SJ-P02-T01-COMPENSATION"]
+    first = build_database(spark, out, xml_glob=GLOBS, tables=tables)
+    n_sj = first.rows["SJ-P02-T01-COMPENSATION"]
+    assert n_sj > 0
+
+    second = build_database(
+        spark,
+        out,
+        xml_glob="tests/fixtures/990_2012_100000002_public.xml",
+        tables=tables,
+    )
+    assert second.rows == {"CORE": 1, "SJ-P02-T01-COMPENSATION": 0}
+    sj = spark.read.parquet(second.tables["SJ-P02-T01-COMPENSATION"])
+    assert sj.count() == n_sj
+
+
+def test_table_failure_is_attributed_in_both_builds(
+    spark, tmp_path, monkeypatch
+):
+    """One table's failed build raises ONE RuntimeError naming it, in
+    the batch and the incremental build alike, after the other tables
+    finished — they are listed as completed."""
+    import threading
+
+    from irs_990_efiler_database_spark import jobs
+    from irs_990_efiler_database_spark.sources.xml_source import (
+        write_return_bundle,
     )
 
-    bundle = str(tmp_path / "bundle")
-    gen_bundle(spark, bundle, 26, partitions=2)
-    import os
+    bad = "SJ-P02-T01-COMPENSATION"
+    good = ["F9-P07-TABLE-00-COMP-OVERVIEW", "SJ-P01-T00-CHECKLIST"]
+    real = jobs.build_rdb_table
+    started: set[str] = set()
+    all_started = threading.Event()
 
-    disk = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _dirs, files in os.walk(bundle)
-        for f in files
-        if not f.startswith(".")  # Hadoop hides .crc checksum files
+    def flaky(returns, table, *a, **kw):
+        if table == bad:
+            # fail only once the other writes are running, so none of
+            # them is still queued (a queued write would be cancelled)
+            all_started.wait(60)
+            raise ValueError("injected failure")
+        started.add(table)
+        if started >= set(good):
+            all_started.set()
+        return real(returns, table, *a, **kw)
+
+    monkeypatch.setattr(jobs, "build_rdb_table", flaky)
+    expected = (
+        rf"build failed for table\(s\) \[{bad}: ValueError: injected "
+        rf"failure\] — completed tables \({', '.join(sorted(good))}\)"
     )
-    ratio = _bundle_uncompressed_ratio(bundle)
-    assert ratio is not None and ratio > 1.0  # XML text compresses
-    got = _estimate_input_bytes(spark, None, bundle)
-    assert got == int(disk * ratio) and got > disk
 
-    # nested (partitioned) layout with no readable footer: the on-disk
-    # recursive sum stands as the lower bound
-    nested = tmp_path / "nested" / "year=2020"
-    nested.mkdir(parents=True)
-    (nested / "part-0.parquet").write_bytes(b"x" * 1234)
-    assert _estimate_input_bytes(spark, None, str(tmp_path / "nested")) == 1234
+    with pytest.raises(RuntimeError, match=expected):
+        jobs.build_database(
+            spark,
+            str(tmp_path / "out"),
+            xml_glob="tests/fixtures/*.xml",
+            tables=[*good, bad],
+        )
 
-    # nested (partitioned) layout WITH readable footers: the recursive
-    # glob finds them and the estimate rescales — a partitioned bundle
-    # crossing 8 GiB must not silently stay in overlap mode
-    part_bundle = str(tmp_path / "part_bundle")
-    gen_bundle(spark, part_bundle + "/year=2019", 13, partitions=1)
-    gen_bundle(spark, part_bundle + "/year=2020", 13, partitions=1)
-    pratio = _bundle_uncompressed_ratio(part_bundle)
-    assert pratio is not None and pratio > 1.0
-    pdisk = sum(
-        os.path.getsize(os.path.join(r, f))
-        for r, _dirs, files in os.walk(part_bundle)
-        for f in files
-        if not f.startswith(".")
-    )
-    pgot = _estimate_input_bytes(spark, None, part_bundle)
-    assert pgot == int(pdisk * pratio) and pgot > pdisk
-
-    # glob estimate
-    x1 = tmp_path / "a.xml"
-    x2 = tmp_path / "b.xml"
-    x1.write_bytes(b"<Return/>" * 10)
-    x2.write_bytes(b"<Return/>" * 20)
-    est = _estimate_input_bytes(spark, str(tmp_path / "*.xml"), None)
-    assert est == x1.stat().st_size + x2.stat().st_size
-
-    # unknown source -> None (never "small"): a scheme no classpath
-    # resolves (s3a would depend on hadoop-aws being absent and could
-    # attempt network access on a configured classpath)
-    assert _estimate_input_bytes(spark, None, "nosuchfs://x/y") is None
-    assert (
-        _estimate_input_bytes(spark, str(tmp_path / "none-*.xml"), None)
-        is None
-    )
+    started.clear()
+    all_started.clear()
+    landing = tmp_path / "landing"
+    write_return_bundle(spark, "tests/fixtures/*.xml", str(landing), 1)
+    with pytest.raises(RuntimeError, match=expected):
+        jobs.build_database_incremental(
+            spark,
+            str(tmp_path / "inc"),
+            str(landing),
+            str(tmp_path / "ckpt"),
+            tables=[*good, bad],
+        )

@@ -8,15 +8,17 @@ process). A single-size number extrapolates ~200x on faith; three
 sizes spanning ~2 decades fit wall = fixed + marginal*docs and TEST
 the linearity (relative residual at the midpoint).
 
-Besides the clean 3-point fit, two at-size probes at the midpoint:
-- write-overlap A/B: the concurrent per-table writes
-  (jobs.build_database's ThreadPoolExecutor) vs the same build
-  serialized (write_concurrency=1) — is the overlap still worth its
-  complexity when the per-table jobs are no longer latency-dominated?
+Besides the clean 3-point fit, one at-size probe at the midpoint:
 - dirty corpus: 1% deterministically truncated documents — dead-letter
   volume must equal the injected count exactly (PERMISSIVE capture at
   size, not just on the 2-doc unit fixture) and the run records the
   capture path's overhead.
+
+There is no serialized-writes arm: the build always overlaps its
+per-table writes (one pool of min(8, #tables) threads), and the option
+that serialized them is gone. Its only evidence of a loss was one run
+pair at 15.4 GB of XML on a contended 32-core host, within that host's
+run-to-run noise.
 
 Every run self-validates through bench._validate_extract_rows (CORE
 row count == docs, 13 non-empty tables) — a broken build must never
@@ -71,7 +73,6 @@ def _timed_build(
     runs: int,
     n_docs: int,
     expect_dead: int = 0,
-    **kw,
 ):
     """best-of-N build with bench's self-validation + clock floor.
     ``expect_dead``: dirty-corpus runs validate that dead-letter volume
@@ -86,7 +87,7 @@ def _timed_build(
         if len(valid) >= 1 and i >= runs:
             break
         t0 = time.perf_counter()
-        result = build_database(spark, f"{out}{i}", bundle_path=bundle, **kw)
+        result = build_database(spark, f"{out}{i}", bundle_path=bundle)
         dt = time.perf_counter() - t0
         # dead-letter equality FIRST (the bench validator's own message
         # assumes a clean corpus, so a dirty-run mismatch must get the
@@ -184,12 +185,8 @@ def main() -> None:
             pred = fixed + marginal * mid["docs"]
             resid = round((mid["sec"] - pred) / mid["sec"], 4)
 
-        # at-size probes at the midpoint (or largest point if only 2)
+        # at-size probe at the midpoint (or largest point if only 2)
         probe_n = (mid or points[-1])["docs"]
-        bundle = f"{tmp}/bundle_{probe_n}"
-        serial_best, _, _ = _timed_build(
-            spark, bundle, f"{tmp}/ser_", runs, probe_n, write_concurrency=1
-        )
         dirty_bundle = f"{tmp}/dirty_{probe_n}"
         gen_bundle(
             spark,
@@ -239,9 +236,6 @@ def main() -> None:
                "transfer to real filings, use --realistic")
             + ")"
         )
-    print(f"overlap A/B at {probe_n:,} docs: concurrent "
-          f"{(mid or points[-1])['sec']}s vs serial {serial_best:.2f}s "
-          f"({serial_best / (mid or points[-1])['sec']:.2f}x)")
     print(f"dirty corpus at {probe_n:,} docs (1% truncated): "
           f"{dirty_dead}/{n_corrupt} dead-lettered, {dirty_best:.2f}s "
           f"({dirty_best / (mid or points[-1])['sec']:.2f}x clean)")
@@ -265,11 +259,6 @@ def main() -> None:
             round(1 / marginal_mb, 1) if marginal_mb > 0 else None
         ),
         "midpoint_residual": resid,
-        "overlap_ab": {
-            "docs": probe_n,
-            "concurrent_sec": (mid or points[-1])["sec"],
-            "serial_sec": round(serial_best, 3),
-        },
         "dirty": {
             "docs": probe_n,
             "injected": n_corrupt,
