@@ -24,7 +24,8 @@ Architecture (Spark-first, NOT a port of the reference's R engine):
 - ``streaming``   — Structured Streaming over event feeds (watermarked
                     tumbling + session windows, availableNow drains)
                     with asserted batch parity.
-- ``sinks``       — partitioned parquet / CSV / dead-letter writers
+- ``sinks``       — partitioned parquet / CSV / dead-letter writers,
+                    partition upsert, compaction and Stata/SPSS export
                     (reference: saveRDS+write.csv :5136-5163).
 - ``jobs``        — orchestration (reference: buildDatabase :4938-5177,
                     buildYear chunking replaced by dynamic partition

@@ -143,15 +143,32 @@ def _parse_bytes(value: str) -> int:
     return 128 * 1024 * 1024
 
 
+def input_bytes(path: str) -> int | None:
+    """On-disk bytes of a table: the size of a single-file table, the
+    sum of every file under a directory-backed one (``os.path.getsize``
+    on a directory returns its inode size, about 4 KB). ``None`` when
+    the path cannot be read locally (non-local storage, missing path);
+    callers treat that as production scale."""
+    try:
+        if os.path.isdir(path):
+            return sum(
+                os.path.getsize(os.path.join(d, f))
+                for d, _, files in os.walk(path)
+                for f in files
+            )
+        return os.path.getsize(path)
+    except OSError:
+        return None
+
+
 def _rebalance_narrow_scan(
     spark: SparkSession, df: DataFrame, path: str
 ) -> DataFrame:
     if os.environ.get("SPARK_GRAFT_NO_SCAN_REBALANCE") == "1":
         return df
     cores = spark.sparkContext.defaultParallelism
-    try:
-        size = os.path.getsize(path)
-    except OSError:
+    size = input_bytes(path)
+    if size is None:
         # non-local storage (s3a/hdfs): listing is driver-side work we
         # refuse to add per load_table call; at object-store scale the
         # input is many files and the rebalance is not needed

@@ -173,14 +173,10 @@ def _drain_knobs(
     (the API refuses the HDFS provider), so TWS callers pass
     ``python_heavy=True, store="rocksdb"`` and this helper only makes
     their partition count scale-adaptive."""
-    import os
+    from ..catalog import _parse_bytes, input_bytes, table_path
 
-    from ..catalog import _parse_bytes, table_path
-
-    try:
-        size = os.path.getsize(table_path(sf_dir, "events"))
-    except OSError:
-        size = None  # non-local storage: treat as production-scale
+    # None (non-local storage) is treated as production scale
+    size = input_bytes(table_path(sf_dir, "events"))
     cores = spark.sparkContext.defaultParallelism
     max_part = _parse_bytes(
         spark.conf.get(

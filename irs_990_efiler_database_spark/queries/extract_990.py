@@ -28,7 +28,7 @@ from ..extract.golden import (
 )
 from ..extract.rdb_builder import build_rdb_table
 from ..extract.schedn_builder import build_schedn_table, schedn_table_names
-from ..plans.concordance import load_core_spec, master_table_names, table_names
+from ..plans.concordance import _DEFAULT_MASTER_SLICES, load_core_spec, table_names
 from ..sources.xml_source import read_return_xml_files
 from . import register
 
@@ -127,8 +127,11 @@ for _t in table_names():
 # :5186-5291): built by the SAME generic build_rdb_table through the
 # registered master spec — concordance groups NOT covered by the two
 # per-table CSVs (Schedule A) plus the 990PF balance sheet (the r4
-# missing-#1 proof + stretch #7)
-for _t in master_table_names():
+# missing-#1 proof + stretch #7). Only the default slices: the
+# process-global master registry also holds any slice registered
+# before this import (a build's, or a catalog slice registered below),
+# which must neither become a query here nor be registered twice
+for _t in sorted(name for name, *_ in _DEFAULT_MASTER_SLICES):
     _register_rdb(_t)
 
 # derived-catalog MANY slices (VERDICT r12 next-round #2): the master

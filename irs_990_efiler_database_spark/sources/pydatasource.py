@@ -21,15 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
     SimpleDataSourceStreamReader,
-    WriterCommitMessage,
 )
 
 from .index import INDEX_ENTRY
@@ -707,782 +702,3 @@ class Irs990IndexSimpleStreamReader(_IndexStreamBase, SimpleDataSourceStreamRead
         return iter(
             [r for f in self._files() if s < f <= e for r in _index_rows(f)]
         )
-
-
-# ---------------------------------------------------------------------------
-# Write path: JSONL sink with a driver-side commit manifest
-# ---------------------------------------------------------------------------
-
-
-class _JsonlCommit(WriterCommitMessage):
-    """Per-task commit message: the staged file's NAME (not path — the
-    driver re-anchors under its own view of the sink) + row count."""
-
-    def __init__(self, file: str, rows: int):
-        self.file = file
-        self.rows = rows
-
-
-class JsonlCommitDataSource(DataSource):
-    """Python DataSource WRITE surface (batch ``writer()`` + streaming
-    ``streamWriter()``): a JSONL sink whose visibility contract is a
-    driver-side commit log — the dead-letter/audit-sink shape (schema
-    drift tolerated by construction, line-per-record, grep-able).
-
-    Exactly-once mechanics, both modes:
-    - every task stages to
-      ``_staging/task-<run>-<partition>-<attempt>.jsonl`` — the run
-      uuid disambiguates across applications (taskAttemptId restarts
-      at 0 in every new SparkContext, so appending from a second app
-      must not reuse the first app's names), the attempt id within
-      the run (retried/speculative tasks never collide);
-    - nothing is visible until the DRIVER promotes staged files and
-      writes the log atomically (temp + ``os.replace``):
-      batch → ``_manifest.json`` (the list of committed files),
-      streaming → ``_commits/<batchId>.json`` per micro-batch. A
-      replayed batch rewrites ITS OWN log entry whole and deletes the
-      superseded attempt's files, so a retry replaces rather than
-      doubles its output — the same per-batch-keyed
-      idempotent-overwrite pattern as ``streaming.continuous_rollup``
-      and the incremental 990 build;
-    - batch ``overwrite`` resets the WHOLE sink's visibility — new
-      manifest first (durable), then the streaming commit log and all
-      superseded data files are garbage-collected (a crash mid-GC
-      strands only invisible files);
-    - the streaming writer is APPEND-ONLY: complete/update output
-      modes (truncate-per-batch) raise at construction rather than
-      accumulate N overlapping snapshots in the log;
-    - ``abort()`` removes the staged files, leaving the log untouched.
-
-    Long-run maintenance: ``_commits/`` grows one small JSON per
-    micro-batch and ``read_jsonl_commit`` lists it driver-side —
-    ``compact_jsonl_commit_log`` folds the per-batch entries into the
-    manifest (run it while the stream is stopped, like any
-    metadata-log maintenance; Spark's own ``_spark_metadata`` has the
-    same story), restoring O(1) listing without moving data files.
-
-    ``read_jsonl_commit`` is the manifest-gated reader: it lists the
-    log driver-side and hands ONLY committed files to the distributed
-    JSON scan — uncommitted/aborted/orphaned stage files are invisible
-    by construction.
-
-    Scale posture: this is the ROW path (Row → dict → ``json.dumps``
-    per record) — measured 12-16x the JVM parquet sink at 600k rows
-    (BENCH_NOTES round 10). Right for low-volume audit/dead-letter
-    feeds where grep-able JSONL is the point; a data-volume connector
-    takes the Arrow shape instead (``ArrowCommitDataSource``, 1.2x
-    parquet, same commit-log machinery). The mis-use is loud, not
-    just documented: a commit moving more than
-    ``ROW_SINK_VOLUME_WARN`` rows emits a RuntimeWarning naming the
-    Arrow sink (round 11 — the VERDICT r10 watch-item that a future
-    high-volume caller silently picks the row path).
-
-    Registration:
-        spark.dataSource.register(JsonlCommitDataSource)
-        df.write.format("jsonlcommit").mode("overwrite").save(path)
-        stream.writeStream.format("jsonlcommit").option("path", path)...
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "jsonlcommit"
-
-    def writer(self, schema, overwrite: bool) -> "JsonlCommitWriter":
-        return JsonlCommitWriter(self.options, overwrite)
-
-    def streamWriter(self, schema, overwrite: bool) -> "JsonlCommitStreamWriter":
-        return JsonlCommitStreamWriter(self.options, overwrite)
-
-
-def _stage_rows(path: str, run_id: str, iterator) -> _JsonlCommit:
-    """Executor side: stream rows to one staged JSONL file; constant
-    memory (line-at-a-time), never a driver round-trip.
-
-    The name carries THREE uniqueness components: ``run_id`` (a fresh
-    uuid per writer instance, minted on the driver and shipped in the
-    pickled writer) disambiguates across applications/restarts —
-    taskAttemptId alone restarts from 0 in every new SparkContext, so
-    a second appending app would otherwise clobber the first app's
-    promoted files; partitionId/taskAttemptId disambiguate within the
-    run (retried and speculative tasks never collide)."""
-    import json
-    import os
-
-    from pyspark import TaskContext
-
-    import base64
-
-    def _jsonable(v):
-        # binary columns MUST round-trip: Spark's JSON reader decodes
-        # base64 for BinaryType schema fields, so encode rather than
-        # letting default=str mangle bytearrays into "bytearray(b'..')"
-        # (that was silent data corruption for any binary payload).
-        # Everything else non-serializable (date, Decimal, ...) keeps
-        # the str() fallback the sink always had.
-        if isinstance(v, (bytes, bytearray)):
-            return base64.b64encode(bytes(v)).decode("ascii")
-        return str(v)
-
-    ctx = TaskContext.get()
-    name = f"task-{run_id}-{ctx.partitionId()}-{ctx.taskAttemptId()}.jsonl"
-    staging = os.path.join(path, "_staging")
-    os.makedirs(staging, exist_ok=True)
-    n = 0
-    with open(os.path.join(staging, name), "w", encoding="utf-8") as fh:
-        for row in iterator:
-            # recursive=True: nested struct values arrive as Row
-            # objects, which default=str would also mangle
-            fh.write(
-                json.dumps(row.asDict(recursive=True), default=_jsonable)
-                + "\n"
-            )
-            n += 1
-    return _JsonlCommit(name, n)
-
-
-def _atomic_write_json(dest: str, payload: dict) -> None:
-    import json
-    import os
-
-    tmp = dest + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, dest)
-
-
-def _promote(path: str, messages, prefix: str = "") -> tuple[list, int]:
-    """Driver side: move each staged file into the sink root (with an
-    optional per-batch prefix so streaming batches never collide) and
-    return ([(final_name, rows)...], total_rows)."""
-    import os
-
-    files, total = [], 0
-    for m in messages:
-        if m is None:
-            continue
-        if m.rows == 0:
-            # an empty task (common: more partitions than rows) adds
-            # nothing to visibility — drop its staged file instead of
-            # growing the log with zero-row entries
-            _unlink_quiet(os.path.join(path, "_staging", m.file))
-            continue
-        final = prefix + m.file
-        os.replace(
-            os.path.join(path, "_staging", m.file), os.path.join(path, final)
-        )
-        files.append({"file": final, "rows": m.rows})
-        total += m.rows
-    return files, total
-
-
-def _discard_staged(path: str, messages) -> None:
-    import os
-
-    _unlink_quiet(
-        *(
-            os.path.join(path, "_staging", m.file)
-            for m in messages
-            if m is not None
-        )
-    )
-
-
-def _committed_names(path: str) -> list[str]:
-    """Every file name currently visible through the manifest and/or
-    the streaming commit log (driver-side log read only).
-
-    Two crash windows are closed HERE, reader-side, so a half-finished
-    maintenance pass can never change what a reader sees:
-    - names are DE-DUPLICATED (ordered): a compaction that wrote the
-      folded manifest but crashed before deleting the per-batch logs
-      double-lists every folded file — the dedupe keeps each file
-      counted once until the fold is re-run;
-    - commit-log entries whose batchId is in the manifest's
-      ``ignore_commits`` fence are skipped: a batch OVERWRITE that
-      crashed between its manifest write and the commit-log deletion
-      must not resurrect the superseded streaming batches."""
-    import glob as _glob
-    import json
-    import os
-
-    names: list[str] = []
-    ignore: set[str] = set()
-    manifest = os.path.join(path, "_manifest.json")
-    if os.path.exists(manifest):
-        with open(manifest, encoding="utf-8") as fh:
-            man = json.load(fh)
-        names += [f["file"] for f in man["files"]]
-        ignore = set(man.get("ignore_commits", []))
-    for c in sorted(_glob.glob(os.path.join(path, "_commits", "*.json"))):
-        if os.path.splitext(os.path.basename(c))[0] in ignore:
-            continue
-        with open(c, encoding="utf-8") as fh:
-            names += [f["file"] for f in json.load(fh)["files"]]
-    return list(dict.fromkeys(names))
-
-
-def _unlink_quiet(*paths: str) -> None:
-    import os
-
-    for p in paths:
-        try:
-            os.remove(p)
-        except FileNotFoundError:
-            pass
-
-
-#: names this sink ever promotes into its root: task-<run>-<part>-<attempt>
-#: with an optional per-batch prefix. The orphan sweep deletes ONLY names
-#: matching this shape, so foreign files a user drops in the directory
-#: (_SUCCESS markers, READMEs) are never touched.
-_DATA_FILE_RE = None
-
-
-def _is_sink_data_file(name: str) -> bool:
-    global _DATA_FILE_RE
-    if _DATA_FILE_RE is None:
-        import re
-
-        _DATA_FILE_RE = re.compile(
-            r"^(batch-\d+-)?task-[0-9a-f]{12}-\d+-\d+\.(jsonl|arrow)$"
-        )
-    return bool(_DATA_FILE_RE.match(name))
-
-
-def _sweep_orphans(path: str, referenced: set[str]) -> None:
-    """Maintenance-barrier garbage collection for the two stranding
-    classes the per-commit cleanup can't see:
-
-    - ``_staging/`` entries from failed/killed task attempts — abort()
-      only receives messages from COMPLETED tasks, so a retried run's
-      dead attempts otherwise accumulate invisible-but-permanent files
-      (deleting a file a zombie attempt is still writing is safe on
-      POSIX: the writer keeps its inode, the name disappears);
-    - sink-root data files referenced by NEITHER the manifest nor any
-      commit log — a crash in streaming commit() after the
-      manifest-eviction write (or after fence-era promotion) but before
-      the final stale-file deletion strands the superseded attempt's
-      promoted files outside every log, where the overwrite GC's
-      referenced-names snapshot can never find them.
-
-    Runs only at natural write barriers (batch OVERWRITE commit,
-    compaction-while-stopped) — never per micro-batch, where a
-    not-yet-logged promotion from the in-flight commit would be live.
-    Both barriers assume NO concurrent writer on the sink: the same
-    single-writer contract the manifest rewrite itself already
-    requires (a concurrent append racing an overwrite could lose its
-    manifest update to the overwrite's last-write-wins regardless of
-    this sweep). Only names matching the sink's own task-attempt
-    naming contract are deleted — foreign files survive in both
-    directories — and each removal is individually best-effort (an
-    undeletable or non-regular entry is skipped, never allowed to fail
-    a commit whose manifest is already durable; a skipped orphan is
-    simply collected by the next barrier)."""
-    import os
-
-    def _best_effort_remove(p: str) -> None:
-        try:
-            os.remove(p)
-        except OSError:
-            pass
-
-    staging = os.path.join(path, "_staging")
-    try:
-        staged = os.listdir(staging)
-    except OSError:
-        staged = []
-    for n in staged:
-        if _is_sink_data_file(n):
-            _best_effort_remove(os.path.join(staging, n))
-    try:
-        root = os.listdir(path)
-    except OSError:
-        return
-    for n in root:
-        if n not in referenced and _is_sink_data_file(n):
-            _best_effort_remove(os.path.join(path, n))
-
-
-#: rows per commit above which the ROW-path sink warns (the Arrow twin
-#: moves data ~10-13x faster; BENCH_NOTES round 10 measured the gap at
-#: 600k rows, so the warning fires well before the measured pain point)
-ROW_SINK_VOLUME_WARN = 100_000
-
-
-def _warn_row_volume(rows: int) -> None:
-    """Advisory only — must NEVER affect commit outcome. Callers invoke
-    it after their durable log/manifest write, and any raise from the
-    warning machinery itself (warnings-as-errors: PYTHONWARNINGS=error,
-    -W error, strict CI filters) is swallowed: an advisory that can
-    fail an otherwise-committed batch would turn a perf hint into an
-    unrecoverable replay loop."""
-    if rows > ROW_SINK_VOLUME_WARN:
-        import warnings
-
-        try:
-            warnings.warn(
-                f"jsonlcommit moved {rows:,} rows in one commit — this is"
-                " the per-row audit/dead-letter path"
-                " (Row->dict->json.dumps, 12-16x slower than parquet)."
-                " Use format('arrowcommit') for data volume (same"
-                " commit-log guarantees, Arrow IPC data path).",
-                RuntimeWarning,
-                stacklevel=3,
-            )
-        except Exception:
-            pass
-
-
-class JsonlCommitWriter(DataSourceWriter):
-    #: Arrow subclasses flip this off — only the row path warns
-    _ROW_PATH = True
-
-    def __init__(self, options: dict, overwrite: bool):
-        import uuid
-
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonlcommit requires a path (save(<dir>))")
-        self.overwrite = overwrite
-        self.run_id = uuid.uuid4().hex[:12]
-
-    def write(self, iterator) -> _JsonlCommit:
-        return _stage_rows(self.path, self.run_id, iterator)
-
-    def commit(self, messages) -> None:
-        import glob as _glob
-        import json
-        import os
-
-        manifest = os.path.join(self.path, "_manifest.json")
-        prev_names: list[str] = []
-        commit_logs: list[str] = []
-        if self.overwrite:
-            # snapshot everything the sink HOLDS (not just what it
-            # shows) before this write becomes visible: the files to
-            # garbage-collect — including files referenced only by a
-            # FENCED log a previous half-GC'd overwrite left behind,
-            # which _committed_names would skip but which must not be
-            # stranded forever — and the commit-log batchIds to fence.
-            # The fence rides in the manifest itself, so the visibility
-            # reset is atomic with the manifest write. Append commits
-            # skip this snapshot entirely (O(1), no log glob).
-            if os.path.exists(manifest):
-                with open(manifest, encoding="utf-8") as fh:
-                    prev_names += [
-                        f["file"] for f in json.load(fh)["files"]
-                    ]
-            commit_logs = sorted(
-                _glob.glob(os.path.join(self.path, "_commits", "*.json"))
-            )
-            for c in commit_logs:
-                with open(c, encoding="utf-8") as fh:
-                    prev_names += [f["file"] for f in json.load(fh)["files"]]
-            prev_names = list(dict.fromkeys(prev_names))
-        files, total = _promote(self.path, messages)
-        new_rows = total  # this write's own volume, pre-manifest-merge
-        batches: dict = {}
-        ignore: list[str] = []
-        if not self.overwrite and os.path.exists(manifest):
-            with open(manifest, encoding="utf-8") as fh:
-                prev = json.load(fh)
-            files = prev["files"] + files
-            total += prev["rows"]
-            # keep the compaction provenance and the overwrite fence: a
-            # replayed batch must still find (and evict) its folded
-            # entry, and a half-GC'd overwrite must stay fenced
-            batches = prev.get("batches", {})
-            ignore = prev.get("ignore_commits", [])
-        else:
-            ignore = [
-                os.path.splitext(os.path.basename(c))[0] for c in commit_logs
-            ]
-        _atomic_write_json(
-            manifest,
-            {
-                "files": files,
-                "rows": total,
-                "batches": batches,
-                "ignore_commits": ignore,
-            },
-        )
-        if self.overwrite:
-            # GC after the fence is durable: drop the commit log and
-            # the superseded data files (a crash mid-GC strands only
-            # fenced/invisible files)
-            _unlink_quiet(*commit_logs)
-            keep = {f["file"] for f in files}
-            _unlink_quiet(
-                *(
-                    os.path.join(self.path, n)
-                    for n in prev_names
-                    if n not in keep
-                )
-            )
-            # ... then sweep what no log ever referenced: dead staged
-            # attempts and data files stranded by a crash between a
-            # prior commit's promotion and its log write. An overwrite
-            # is a write barrier — everything visible is in `keep`.
-            _sweep_orphans(self.path, keep)
-        # advisory AFTER the manifest is durable: it must never sit in
-        # the commit critical section (review r11 — warnings-as-errors
-        # would otherwise fail a batch whose files were already
-        # promoted but not yet logged)
-        if self._ROW_PATH:
-            _warn_row_volume(new_rows)
-
-    def abort(self, messages) -> None:
-        _discard_staged(self.path, messages)
-
-
-class JsonlCommitStreamWriter(DataSourceStreamWriter):
-    _ROW_PATH = True
-
-    def __init__(self, options: dict, overwrite: bool = False):
-        import uuid
-
-        if overwrite:
-            # complete/update output modes truncate the sink every
-            # micro-batch; this log-structured sink only implements
-            # append visibility — refuse loudly rather than union N
-            # snapshots through the reader
-            raise ValueError(
-                "jsonlcommit streaming sink supports append output mode"
-                " only (got a truncate/overwrite request)"
-            )
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonlcommit requires a path option")
-        self.run_id = uuid.uuid4().hex[:12]
-
-    def write(self, iterator) -> _JsonlCommit:
-        return _stage_rows(self.path, self.run_id, iterator)
-
-    def commit(self, messages, batchId: int) -> None:
-        import json
-        import os
-
-        log = os.path.join(self.path, "_commits", f"{batchId}.json")
-        stale: list[str] = []
-        if os.path.exists(log):
-            # replay: this batch already committed once (e.g. restart
-            # between sink commit and offset commit) — the new entry
-            # REPLACES the old, and the old attempt's promoted files
-            # are deleted once the rewrite is durable
-            with open(log, encoding="utf-8") as fh:
-                stale = [f["file"] for f in json.load(fh)["files"]]
-        # a replayed batch may ALSO have been folded into the manifest
-        # by compact_jsonl_commit_log (stop stream after sink commit
-        # but before offset commit, compact, restart → replay): the
-        # manifest records per-batch provenance exactly so the replay
-        # can evict its own folded entry. Manifest-first ordering is
-        # crash-safe for THIS eviction — losing visibility of a
-        # not-yet-offset-committed batch is correct (Spark will re-run
-        # the commit). The overwrite FENCE is the opposite case and is
-        # lifted only AFTER the new log is durable, below.
-        manifest = os.path.join(self.path, "_manifest.json")
-        man = None
-        if os.path.exists(manifest):
-            with open(manifest, encoding="utf-8") as fh:
-                man = json.load(fh)
-            folded = man.get("batches", {}).pop(str(batchId), [])
-            if folded:
-                drop = set(folded)
-                man["files"] = [
-                    f for f in man["files"] if f["file"] not in drop
-                ]
-                man["rows"] = sum(f["rows"] for f in man["files"])
-                _atomic_write_json(manifest, man)
-                stale += folded
-        files, total = _promote(self.path, messages, prefix=f"batch-{batchId}-")
-        os.makedirs(os.path.join(self.path, "_commits"), exist_ok=True)
-        # rewrite THIS batch's entry whole: a replayed batch replaces
-        # its own output instead of appending a second copy. If the id
-        # is fenced (half-GC'd overwrite), the new entry is written
-        # INVISIBLE first — the fence lift below is then the atomic
-        # visibility flip. A crash before the lift leaves the batch
-        # uncommitted-and-invisible (Spark retries); lifting BEFORE the
-        # log write would open a window where the stale pre-overwrite
-        # entry resurrects.
-        _atomic_write_json(
-            log, {"batchId": batchId, "files": files, "rows": total}
-        )
-        if man is not None and str(batchId) in man.get("ignore_commits", []):
-            # committing this id again declares NEW visibility intent —
-            # lift its overwrite fence now that the new log (which
-            # atomically replaced any stale fenced content at the same
-            # path) is durable
-            man["ignore_commits"] = [
-                i for i in man["ignore_commits"] if i != str(batchId)
-            ]
-            _atomic_write_json(manifest, man)
-        keep = {f["file"] for f in files}
-        _unlink_quiet(
-            *(os.path.join(self.path, n) for n in stale if n not in keep)
-        )
-        # advisory AFTER the batch log is durable (see the batch writer)
-        if self._ROW_PATH:
-            _warn_row_volume(total)
-
-    def abort(self, messages, batchId: int) -> None:
-        _discard_staged(self.path, messages)
-
-
-def read_jsonl_commit(spark, path: str, schema) -> "DataFrame":
-    """Manifest-gated read of a ``jsonlcommit`` sink: only files named
-    by the batch manifest and/or the per-batch streaming commit log are
-    scanned (uncommitted stage files, aborted attempts and a replayed
-    batch's superseded output are invisible). Listing is one driver-side
-    log read; the JSON parse fans out as a normal distributed scan with
-    an explicit schema (no sampling pass)."""
-    import os
-
-    names = _committed_names(path)
-    if not names:
-        from pyspark.sql.types import StructType
-
-        empty_schema = (
-            schema
-            if isinstance(schema, StructType)
-            else spark.createDataFrame([], schema).schema
-        )
-        return spark.createDataFrame([], empty_schema)
-    return spark.read.schema(schema).json(
-        [os.path.join(path, n) for n in names]
-    )
-
-
-def compact_jsonl_commit_log(path: str) -> int:
-    """Fold every streaming ``_commits/<batchId>.json`` entry into the
-    batch manifest and delete the per-batch logs — the maintenance
-    pass that keeps ``read_jsonl_commit``'s driver-side listing O(1)
-    on a long-lived stream (one JSON accumulates per micro-batch
-    otherwise). Data files never move; only log metadata is rewritten,
-    manifest-first (a crash after the manifest write but before the
-    log deletion would double-list a file, so the fold de-duplicates
-    by name and the deletion runs only after the manifest is durable
-    — re-running the compaction is always safe/idempotent).
-
-    Run while the stream is STOPPED (metadata-log maintenance). A
-    restart may still REPLAY the last batch if its offset never
-    committed — the manifest therefore records per-batch provenance
-    (``batches``: batchId → folded file names) so the streaming
-    writer's replay path can evict exactly its own folded entry
-    (property-tested: commit→compact→replay never double-counts).
-    Returns the number of batch entries folded."""
-    import glob as _glob
-    import json
-    import os
-
-    logs = sorted(_glob.glob(os.path.join(path, "_commits", "*.json")))
-    manifest = os.path.join(path, "_manifest.json")
-    if not logs:
-        # nothing to fold, but the orphan sweep is still this pass's
-        # job: a sink with no (or only-manifest) state can still hold
-        # dead staged attempts / crash-stranded promoted files
-        _sweep_orphans(path, set(_committed_names(path)))
-        return 0
-    files: list[dict] = []
-    batches: dict[str, list[str]] = {}
-    ignore: set[str] = set()
-    if os.path.exists(manifest):
-        with open(manifest, encoding="utf-8") as fh:
-            man = json.load(fh)
-        files = man["files"]
-        batches = man.get("batches", {})
-        ignore = set(man.get("ignore_commits", []))
-    seen = {f["file"] for f in files}
-    n_fenced = 0
-    fold_logs: list[str] = []
-    for c in logs:
-        if os.path.splitext(os.path.basename(c))[0] in ignore:
-            # a half-GC'd overwrite left this entry fenced: folding it
-            # back would resurrect the superseded batch — instead,
-            # FINISH the overwrite's GC now. Deleting the fenced log
-            # (and its not-otherwise-visible files) BEFORE the manifest
-            # rewrite is safe — the entry is invisible under the
-            # current fence — and it is what makes clearing the fence
-            # below crash-safe (no window where the fence is gone but
-            # the fenced log survives).
-            n_fenced += 1
-            with open(c, encoding="utf-8") as fh:
-                gone = [f["file"] for f in json.load(fh)["files"]]
-            _unlink_quiet(c)
-            _unlink_quiet(
-                *(os.path.join(path, n) for n in gone if n not in seen)
-            )
-            continue
-        fold_logs.append(c)
-        with open(c, encoding="utf-8") as fh:
-            entry = json.load(fh)
-        folded = []
-        for f in entry["files"]:
-            if f["file"] not in seen:
-                seen.add(f["file"])
-                files.append(f)
-                folded.append(f["file"])
-        if folded:
-            batches[str(entry["batchId"])] = folded
-    _atomic_write_json(
-        manifest,
-        {
-            "files": files,
-            "rows": sum(f["rows"] for f in files),
-            "batches": batches,
-            "ignore_commits": [],
-        },
-    )
-    # crash before this deletion double-lists the folded files in
-    # manifest + log; the reader de-duplicates, and re-running the
-    # compaction converges
-    _unlink_quiet(*fold_logs)
-    # stopped-stream barrier: with every surviving log folded, the
-    # manifest is the complete visibility set — sweep dead staged
-    # attempts and never-referenced promoted strays (a batch whose
-    # commit crashed between promotion and its log write will REPLAY
-    # from fresh staged files under a new run_id, so deleting its
-    # orphans loses nothing)
-    _sweep_orphans(path, seen)
-    return len(fold_logs)
-
-
-# ---------------------------------------------------------------------------
-# Arrow-native variant: IPC-stream sink + manifest-gated Arrow reader
-# ---------------------------------------------------------------------------
-
-
-def _stage_batches(path: str, run_id: str, iterator) -> _JsonlCommit:
-    """Executor side of the ARROW write path: RecordBatches straight
-    into an Arrow IPC stream file — no Spark-Row materialization, no
-    per-row Python at all (the measured gap vs the row path is ~30x,
-    BENCH_NOTES round 10). Same attempt-unique naming contract as
-    ``_stage_rows``."""
-    import os
-
-    import pyarrow as pa
-
-    from pyspark import TaskContext
-
-    ctx = TaskContext.get()
-    name = f"task-{run_id}-{ctx.partitionId()}-{ctx.taskAttemptId()}.arrow"
-    staging = os.path.join(path, "_staging")
-    os.makedirs(staging, exist_ok=True)
-    n = 0
-    writer = None
-    fh = open(os.path.join(staging, name), "wb")
-    try:
-        for batch in iterator:
-            if writer is None:
-                writer = pa.ipc.new_stream(fh, batch.schema)
-            writer.write_batch(batch)
-            n += batch.num_rows
-    finally:
-        if writer is not None:
-            writer.close()
-        fh.close()
-    return _JsonlCommit(name, n)
-
-
-class ArrowCommitDataSource(DataSource):
-    """Arrow-native twin of ``jsonlcommit`` (SURVEY §2.1): the same
-    driver-side commit-log visibility contract — staging, atomic
-    manifest/per-batch log, replay replacement, overwrite GC,
-    compaction all SHARED with the row sink — but the data path is
-    ``DataSourceArrowWriter``/``DataSourceStreamArrowWriter``
-    (RecordBatches into Arrow IPC stream files, zero per-row Python)
-    and the read side is a manifest-gated ``DataSourceReader`` that
-    YIELDS RecordBatches (Arrow both directions). This is the shape a
-    Python connector for a columnar system should take: the row sink
-    is for low-volume audit/dead-letter feeds, this one for data.
-
-    Registration:
-        spark.dataSource.register(ArrowCommitDataSource)
-        df.write.format("arrowcommit").mode("append").save(path)
-        spark.read.format("arrowcommit").load(path)   # schema inferred
-    """
-
-    @classmethod
-    def name(cls) -> str:
-        return "arrowcommit"
-
-    def schema(self):
-        # called only when the user gave no schema: one driver-side
-        # IPC-header read of the first committed file
-        import os
-
-        import pyarrow as pa
-
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("arrowcommit requires a path (load(<dir>))")
-        names = _committed_names(path)
-        if not names:
-            raise ValueError(
-                "arrowcommit: empty sink has no inferable schema — pass"
-                " .schema(...) explicitly"
-            )
-        with open(os.path.join(path, names[0]), "rb") as fh:
-            return from_arrow_schema(pa.ipc.open_stream(fh).schema)
-
-    def reader(self, schema) -> "ArrowCommitReader":
-        return ArrowCommitReader(self.options)
-
-    def writer(self, schema, overwrite: bool) -> "ArrowCommitWriter":
-        return ArrowCommitWriter(self.options, overwrite)
-
-    def streamWriter(self, schema, overwrite: bool) -> "ArrowCommitStreamWriter":
-        return ArrowCommitStreamWriter(self.options, overwrite)
-
-
-class ArrowCommitReader(DataSourceReader):
-    """Manifest-gated read: one InputPartition per COMMITTED file (the
-    same visibility rule as ``read_jsonl_commit``), each task streaming
-    its file's RecordBatches straight to Spark — uncommitted, aborted
-    and superseded files are invisible by construction."""
-
-    def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("arrowcommit requires a path (load(<dir>))")
-
-    def partitions(self) -> list[InputPartition]:
-        import os
-
-        return [
-            _IndexFilePartition(os.path.join(self.path, n))
-            for n in _committed_names(self.path)
-        ]
-
-    def read(self, partition: _IndexFilePartition):
-        import pyarrow as pa
-
-        if partition is None:
-            # an EMPTY sink: pyspark substitutes [None] for an empty
-            # partitions() list and still runs one task — yield nothing
-            # so the read returns a typed empty frame (the jsonl twin's
-            # contract) instead of crashing on partition.path
-            return
-        with open(partition.path, "rb") as fh:
-            yield from pa.ipc.open_stream(fh)
-
-
-class ArrowCommitWriter(DataSourceArrowWriter, JsonlCommitWriter):
-    """commit/abort (manifest, overwrite GC) inherited from the row
-    sink; only the staging format differs."""
-
-    _ROW_PATH = False  # this IS the data path — no volume warning
-
-    def write(self, iterator) -> _JsonlCommit:
-        return _stage_batches(self.path, self.run_id, iterator)
-
-
-class ArrowCommitStreamWriter(DataSourceStreamArrowWriter, JsonlCommitStreamWriter):
-    """Per-batch commit log, replay replacement and append-only
-    enforcement inherited from the row stream sink."""
-
-    _ROW_PATH = False  # this IS the data path — no volume warning
-
-    def write(self, iterator) -> _JsonlCommit:
-        return _stage_batches(self.path, self.run_id, iterator)

@@ -530,116 +530,6 @@ def test_compact_table_partitioned_compacts_within_partitions(spark, tmp_path):
     assert (before["n"], before["h"]) == (after["n"], after["h"])
 
 
-def test_time_partitioned_write_prunes_partitions(spark, tmp_path):
-    """A date predicate over the time-partitioned layout must prune at
-    the DIRECTORY level: the scan's partition filters name event_date
-    and the planned scan reads strictly fewer partitions than exist."""
-    from pyspark.sql import functions as F
-
-    from irs_990_efiler_database_spark.catalog import load_table
-    from irs_990_efiler_database_spark.sinks import write_time_partitioned
-    from tests.conftest import SF_SMOKE
-
-    path = str(tmp_path / "events_by_day")
-    ev = load_table(spark, SF_SMOKE, "events")
-    write_time_partitioned(ev, path, "ts")
-    from pathlib import Path
-
-    n_days = len([d for d in Path(path).iterdir() if d.name.startswith("event_date=")])
-    assert n_days > 1
-
-    one_day = (
-        spark.read.parquet(path)
-        .filter(F.col("event_date") == F.lit("2024-01-01"))
-    )
-    plan = one_day._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "event_date" in plan
-    # the pruned scan must touch exactly the one matching directory
-    import re
-
-    m = re.search(r"partitions read: (\d+)", plan)
-    if m:  # Spark prints the count in FileSourceScan metadata
-        assert int(m.group(1)) == 1
-    # row counts agree with the unpartitioned source
-    want = ev.filter(F.to_date("ts") == F.lit("2024-01-01")).count()
-    assert one_day.count() == want > 0
-
-
-def test_dynamic_partition_pruning_on_time_layout(spark, tmp_path):
-    """Joining the date-partitioned fact against a filtered dim must
-    inject a dynamicpruningexpression into the scan's PartitionFilters
-    — Catalyst prunes fact partitions at RUNTIME from the dim's
-    surviving keys (the 100 TB join-pruning story; no code in this
-    repo schedules it, the declarative layout earns it)."""
-    from pyspark.sql import functions as F
-
-    from irs_990_efiler_database_spark.catalog import load_table
-    from irs_990_efiler_database_spark.sinks import write_time_partitioned
-    from tests.conftest import SF_SMOKE
-
-    path = str(tmp_path / "events_by_day")
-    write_time_partitioned(load_table(spark, SF_SMOKE, "events"), path, "ts")
-    fact = spark.read.parquet(path)
-    dim = spark.createDataFrame(
-        [("2024-01-01", 1), ("2024-01-02", 1), ("2024-01-15", 0)], ["d", "flag"]
-    ).withColumn("d", F.to_date("d"))
-    j = fact.join(dim, fact.event_date == dim.d).filter(F.col("flag") == 1)
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower()
-    assert j.count() == fact.filter(
-        F.col("event_date").isin("2024-01-01", "2024-01-02")
-    ).count()
-
-
-def test_zorder_write_tightens_file_stats(spark, tmp_path):
-    """Z-ordered layout must cluster BOTH key columns: summed per-file
-    min/max extents (from the parquet footers, via pyarrow) shrink
-    substantially versus a round-robin layout of the same data."""
-    import pyarrow.parquet as pq
-    from pathlib import Path
-
-    from irs_990_efiler_database_spark.catalog import load_table
-    from irs_990_efiler_database_spark.sinks import write_zordered
-    from tests.conftest import SF_SMOKE
-
-    li = load_table(spark, SF_SMOKE, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    zpath, rpath = str(tmp_path / "z"), str(tmp_path / "r")
-    write_zordered(li, zpath, ("l_partkey", "l_suppkey"), n_files=8)
-    li.repartition(8).write.parquet(rpath)
-
-    def extent(path, col):
-        total = 0
-        for f in Path(path).rglob("*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            lo = min(
-                md.row_group(i).column(_col_ix(md, col)).statistics.min
-                for i in range(md.num_row_groups)
-            )
-            hi = max(
-                md.row_group(i).column(_col_ix(md, col)).statistics.max
-                for i in range(md.num_row_groups)
-            )
-            total += hi - lo
-        return total
-
-    def _col_ix(md, name):
-        for i in range(md.num_columns):
-            if md.row_group(0).column(i).path_in_schema == name:
-                return i
-        raise KeyError(name)
-
-    for col in ("l_partkey", "l_suppkey"):
-        z, r = extent(zpath, col), extent(rpath, col)
-        assert z < 0.75 * r, (col, z, r)
-    # data survives byte-for-byte
-    assert (
-        spark.read.parquet(zpath).orderBy("l_partkey", "l_suppkey", "l_quantity").collect()
-        == li.orderBy("l_partkey", "l_suppkey", "l_quantity").collect()
-    )
-
-
 def test_validate_database_green_on_fixture_build(result, spark):
     from irs_990_efiler_database_spark.jobs import validate_database
 
@@ -652,147 +542,6 @@ def test_validate_database_green_on_fixture_build(result, spark):
         "core_fisyr_range",
         "core_formtype_known",
     }
-
-
-def test_snapshot_sink_time_travel(spark, tmp_path):
-    """Snapshot versioning: three writes → three committed versions;
-    the default read sees the latest, time travel reads any older
-    version byte-for-byte, and an uncommitted (_SUCCESS-less) snapshot
-    is invisible."""
-    import shutil
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    from irs_990_efiler_database_spark.sinks import (
-        read_snapshot,
-        snapshot_versions,
-        write_snapshot,
-    )
-
-    path = str(tmp_path / "snap")
-    for n in (3, 5, 8):
-        df = spark.range(n).select(F.col("id"), (F.col("id") * 2).alias("v"))
-        write_snapshot(df, path)
-    assert snapshot_versions(path) == [0, 1, 2]
-    assert read_snapshot(spark, path).count() == 8  # latest
-    assert read_snapshot(spark, path, version=0).count() == 3  # time travel
-    # a torn write (no _SUCCESS) must stay invisible to readers
-    torn = Path(path) / "_v=3"
-    shutil.copytree(Path(path) / "_v=2", torn)
-    (torn / "_SUCCESS").unlink()
-    assert snapshot_versions(path) == [0, 1, 2]
-    assert read_snapshot(spark, path).count() == 8
-    # but the next write claims version 4 (never reuses a dirty slot)
-    v = write_snapshot(spark.range(2).select("id", F.col("id").alias("v")), path)
-    assert v == 4 and read_snapshot(spark, path).count() == 2
-
-
-def test_delete_rows_rewrites_only_affected_partitions(spark, tmp_path):
-    """Right-to-be-forgotten: deleting one user's rows must remove
-    exactly those rows, preserve everything else byte-for-byte, and
-    leave partitions without that user physically untouched (mtime
-    equality — the cost-proportionality contract)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from irs_990_efiler_database_spark.catalog import load_table
-    from irs_990_efiler_database_spark.sinks import delete_rows, write_table
-    from tests.conftest import SF_SMOKE
-
-    path = str(tmp_path / "events_gdpr")
-    ev = load_table(spark, SF_SMOKE, "events").withColumn(
-        "day", F.date_format("ts", "yyyy-MM-dd")
-    )
-    write_table(ev, path, partition_by=("day",))
-    before = spark.read.parquet(path)
-    n_total = before.count()
-    target = 7  # a user active on only some days
-    n_target = before.filter(F.col("user_id") == target).count()
-    assert 0 < n_target < n_total
-    touched_days = {
-        r["day"]
-        for r in before.filter(F.col("user_id") == target)
-        .select("day")
-        .distinct()
-        .collect()
-    }
-    all_days = {r["day"] for r in before.select("day").distinct().collect()}
-    untouched = sorted(all_days - touched_days)
-    from pathlib import Path
-
-    def mtimes(days):
-        out = {}
-        for d in days:
-            for f in (Path(path) / f"day={d}").glob("*.parquet"):
-                out[str(f)] = f.stat().st_mtime_ns
-        return out
-
-    pre = mtimes(untouched)
-    time.sleep(0.05)
-    n_deleted = delete_rows(spark, path, "user_id", [target], ("day",))
-    assert n_deleted == n_target
-    after = spark.read.parquet(path)
-    assert after.filter(F.col("user_id") == target).count() == 0
-    assert after.count() == n_total - n_target
-    if untouched:
-        assert mtimes(untouched) == pre  # untouched partitions not rewritten
-
-
-def test_tolerant_read_skips_torn_file(spark, tmp_path):
-    """A truncated parquet object fails the strict scan but the
-    tolerant reader returns every surviving row; the strict default
-    stays strict (corruption must not be silently tolerated
-    everywhere)."""
-    from pathlib import Path
-
-    from irs_990_efiler_database_spark.catalog import load_table
-    from irs_990_efiler_database_spark.sinks import read_table_tolerant
-    from tests.conftest import SF_SMOKE
-
-    path = str(tmp_path / "t")
-    load_table(spark, SF_SMOKE, "region").repartition(4).write.parquet(path)
-    files = sorted(Path(path).glob("part-*.parquet"))
-    assert len(files) == 4
-    good_rows = 0
-    for f in files[1:]:
-        import pyarrow.parquet as pq
-
-        good_rows += pq.read_metadata(f).num_rows
-    # tear the first file (truncate to half); drop its checksum
-    # sidecar so the local FS serves the torn bytes like an object
-    # store would, instead of failing the read at the CRC layer
-    data = files[0].read_bytes()
-    files[0].write_bytes(data[: len(data) // 2])
-    crc = files[0].parent / f".{files[0].name}.crc"
-    if crc.exists():
-        crc.unlink()
-
-    with pytest.raises(Exception):
-        spark.read.parquet(path).count()
-    assert read_table_tolerant(spark, path).count() == good_rows
-
-
-def test_vacuum_snapshots_keeps_newest(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from irs_990_efiler_database_spark.sinks import (
-        read_snapshot,
-        snapshot_versions,
-        vacuum_snapshots,
-        write_snapshot,
-    )
-
-    path = str(tmp_path / "snap")
-    for n in (2, 4, 6, 8):
-        write_snapshot(spark.range(n).select("id", (F.col("id") + 1).alias("v")), path)
-    assert snapshot_versions(path) == [0, 1, 2, 3]
-    removed = vacuum_snapshots(path, keep_last=2)
-    assert removed == [0, 1]
-    assert snapshot_versions(path) == [2, 3]
-    assert read_snapshot(spark, path).count() == 8
-    assert read_snapshot(spark, path, version=2).count() == 6
 
 
 def test_schema_evolution_merge_read(spark, tmp_path):
@@ -828,48 +577,6 @@ def test_schema_evolution_merge_read(spark, tmp_path):
         .toString()
     )
     assert "PartitionFilters: [isnotnull(seg" in plan
-
-
-def test_orc_export_roundtrip(spark, tmp_path):
-    """ORC sink round-trips values, schema, and partitioning; the
-    partition-pruned re-read scans only the selected directory."""
-    from irs_990_efiler_database_spark.sinks import write_orc
-
-    df = spark.createDataFrame(
-        [(1, "a", 2020), (2, "b", 2020), (3, "c", 2021)],
-        "id long, name string, year int",
-    )
-    write_orc(df, str(tmp_path / "orc"), partition_by=("year",))
-    back = spark.read.orc(str(tmp_path / "orc"))
-    assert sorted(back.columns) == ["id", "name", "year"]
-    assert {(r.id, r.name, int(r.year)) for r in back.collect()} == {
-        (1, "a", 2020), (2, "b", 2020), (3, "c", 2021),
-    }
-    pruned = back.filter(back.year == 2021)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert pruned.count() == 1
-    assert "PartitionFilters: [isnotnull(year" in plan or "year#" in plan
-
-
-def test_jsonl_export_roundtrip(spark, tmp_path):
-    """JSONL sink preserves nested structures and gzips each shard."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from irs_990_efiler_database_spark.sinks import write_jsonl
-
-    df = spark.createDataFrame(
-        [(1, "hello", ["a", "b"]), (2, "world", [])],
-        "doc_id long, text string, tags array<string>",
-    ).withColumn("meta", F.struct(F.lit("en").alias("lang")))
-    write_jsonl(df, str(tmp_path / "jsonl"))
-    shards = glob.glob(str(tmp_path / "jsonl" / "*.json.gz"))
-    assert shards, "expected gzip-compressed json shards"
-    back = spark.read.json(str(tmp_path / "jsonl"))
-    rows = {r.doc_id: r for r in back.collect()}
-    assert rows[1].text == "hello" and list(rows[1].tags) == ["a", "b"]
-    assert rows[1].meta.lang == "en" and list(rows[2].tags) == []
 
 
 def test_build_database_builds_master_slice_on_request(spark, tmp_path):

@@ -76,3 +76,37 @@ def test_aggregators_expose_moved_names_in_either_order():
         assert proc.returncode == 0, (
             f"{child} -> {parent}.{name} broke:\n{proc.stderr[-2000:]}"
         )
+
+
+def _query_names_after(prelude: str) -> list[str]:
+    """The registry's query names in a fresh interpreter that runs
+    ``prelude`` before the registry first loads."""
+    repo = str(QUERIES_DIR.parent.parent)
+    proc = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            f"import sys; sys.path.insert(0, {repo!r}); {prelude}"
+            " from irs_990_efiler_database_spark import queries;"
+            " print('\\n'.join(queries.all_queries()))",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    return proc.stdout.split()
+
+
+def test_registry_loads_after_a_catalog_slice_was_registered():
+    """A build may register a derived-catalog MANY slice in the
+    process-global master registry before anything loads the query
+    registry. Loading it afterwards must not register that slice a
+    second time, and must yield exactly the names a fresh load does."""
+    after_slice = _query_names_after(
+        "from irs_990_efiler_database_spark.plans.concordance import"
+        " register_catalog_many_table;"
+        " register_catalog_many_table('IRS990ScheduleN-PART-02',"
+        " table_name='MC-IRS990ScheduleN-PART-02-MANY');"
+    )
+    assert after_slice == _query_names_after("")

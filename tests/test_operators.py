@@ -443,30 +443,6 @@ def test_ivf_topk_matches_exact_within_probed_cells(spark):
         assert exact[(r["query_id"], r["neighbor_id"])] == r["cos"]
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Bucketing is the pay-once-shuffle-forever path: two tables
-    bucketed on the join key must sort-merge join with no Exchange."""
-    from irs_990_efiler_database_spark.sinks import write_bucketed
-
-    orders = load_table(spark, SF, "orders").select("o_orderkey", "o_totalprice")
-    li = load_table(spark, SF, "lineitem").select("l_orderkey", "l_quantity")
-    write_bucketed(orders, "bkt_orders", "o_orderkey", 8)
-    write_bucketed(li, "bkt_lineitem", "l_orderkey", 8)
-    try:
-        a = spark.table("bkt_orders")
-        b = spark.table("bkt_lineitem")
-        # force a non-broadcast join so the shuffle question is real
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = a.join(b, a.o_orderkey == b.l_orderkey)
-        plan = _plan(joined)
-        assert "Exchange" not in plan
-        assert joined.count() == li.count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bkt_orders")
-        spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-
-
 def test_connected_components_chain_and_clique(spark):
     """Min-label propagation must label a long chain (worst-case
     diameter), a clique, and an isolated pair — cluster_id is the

@@ -111,3 +111,37 @@ def test_parse_bytes_suffix_table():
     assert _parse_bytes("1g") == 1024**3
     assert _parse_bytes("2k") == 2048
     assert _parse_bytes("garbage") == 128 * 1024**2  # fail-safe default
+
+
+def test_directory_backed_table_is_sized_by_its_files(spark, tmp_path):
+    """A directory-backed ``*.parquet`` table larger than cores x
+    maxPartitionBytes is sized by its files and gets the
+    production-scale profile: session drain defaults and no scan
+    rebalance. Sizing the directory inode (about 4 KB) instead gave it
+    the bounded-drain profile."""
+    import os
+
+    from irs_990_efiler_database_spark.catalog import input_bytes, table_path
+    from irs_990_efiler_database_spark.queries import events_streaming as es
+
+    sf = str(tmp_path)
+    path = table_path(sf, "events")
+    load_table(spark, SF, "events").coalesce(1).write.parquet(path)
+    total = input_bytes(path)
+    assert total == sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+    )
+    cores = spark.sparkContext.defaultParallelism
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", str(total // (2 * cores)))
+    try:
+        plan = _plan(load_table(spark, sf, "events", rebalance=True))
+        assert "RoundRobinPartitioning" not in plan
+        assert es._drain_knobs(spark, sf) == {
+            "state_partitions": None,
+            "state_store": None,
+        }
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)

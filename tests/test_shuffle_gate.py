@@ -67,14 +67,12 @@ def test_bounded_but_not_measured_is_a_violation():
     assert len(problems) == 1
     assert "fdedup_minhash_pairs" in problems[0] and "NOT measured" in problems[0]
     # and the full committed bounds file against the full audited
-    # keyset (plan-metric families + app-delta streaming/sink families,
+    # keyset (plan-metric families + app-delta streaming families,
     # round 11) is symmetric — every bounded family is audited and
     # vice versa
-    from tools.shuffle_budget import AUDIT, SINK_AUDIT, STREAM_AUDIT
+    from tools.shuffle_budget import AUDIT, STREAM_AUDIT
 
-    assert set(BOUNDS["bounds"]) == (
-        set(AUDIT) | set(STREAM_AUDIT) | set(SINK_AUDIT)
-    )
+    assert set(BOUNDS["bounds"]) == set(AUDIT) | set(STREAM_AUDIT)
 
 
 def test_deliberate_deoptimization_trips_the_gate(spark):

@@ -81,18 +81,6 @@ FAMILIES = {
 }
 
 
-def _input_bytes(sf_dir: str, tables: list[str]) -> int:
-    total = 0
-    for t in tables:
-        p = Path(sf_dir) / f"{t}.parquet"
-        total += (
-            sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
-            if p.is_dir()
-            else p.stat().st_size
-        )
-    return total
-
-
 def _time_query(spark, fn, sf_dir: str) -> float:
     spark.catalog.clearCache()
     t0 = time.time()
@@ -152,6 +140,7 @@ def main() -> None:
     )
     from irs_990_efiler_database_spark.queries import all_queries
     from irs_990_efiler_database_spark.session import get_spark
+    from tools.shuffle_budget import _input_bytes
 
     spark = get_spark("capacity_plan")
     qs = all_queries()

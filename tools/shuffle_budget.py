@@ -58,64 +58,18 @@ AUDIT = {
 }
 
 
-# Round-10 families whose work happens INSIDE a streaming query or a
-# Python DataSource sink: the DataFrame a registry callable returns
-# carries none of the stream's/writer's exchanges in its own executed
-# plan, so summarize_execution() would report a dishonest ~0. These are
-# measured as the APP-LEVEL delta of stage-aggregated shuffle-write and
-# spill bytes (driver AppStatusStore) across the whole callable — the
-# tool runs families serially, so the delta is attributable. The delta
-# covers the callable END-TO-END (staging prep included): a
-# conservative upper bound on the family's shuffle ratio.
+# Round-10 families whose work happens INSIDE a streaming query: the
+# DataFrame a registry callable returns carries none of the stream's
+# exchanges in its own executed plan, so summarize_execution() would
+# report a dishonest ~0. These are measured as the APP-LEVEL delta of
+# stage-aggregated shuffle-write and spill bytes (driver
+# AppStatusStore) across the whole callable — the tool runs families
+# serially, so the delta is attributable. The delta covers the
+# callable END-TO-END (staging prep included): a conservative upper
+# bound on the family's shuffle ratio.
 STREAM_AUDIT = {
     "events_stream_state_introspection": ["events"],
     "events_stream_running_totals_bootstrap_tws": ["events"],
-}
-
-
-def _sink_arrowcommit_roundtrip(spark, sf_dir: str):
-    """arrowcommit WRITE + full distributed READ-BACK of the events
-    table — the Python DataSource Arrow data path (round-10 surface
-    with no committed bound). Expected shuffle ≈ 0: the sink stages
-    one IPC file per task and the reader plans one partition per
-    committed file; any shuffle appearing here means the connector
-    started moving data it should stream straight through. All actions
-    run inside this function (the caller's collect() sees a 1-row
-    summary), so the app-delta captures the whole round-trip."""
-    import shutil
-    import tempfile
-
-    from irs_990_efiler_database_spark.sources.pydatasource import (
-        ArrowCommitDataSource,
-    )
-
-    try:
-        spark.dataSource.register(ArrowCommitDataSource)
-    except Exception:
-        pass
-    tmp = tempfile.mkdtemp(prefix="shuffle_arrowcommit_")
-    try:
-        sink = f"{tmp}/sink"
-        events = spark.read.parquet(f"{sf_dir}/events.parquet")
-        events.write.format("arrowcommit").mode("append").save(sink)
-        n_back = (
-            spark.read.format("arrowcommit").load(sink).groupBy().count()
-        ).collect()[0][0]
-        n_src = events.count()
-        if n_back != n_src:
-            raise RuntimeError(
-                f"arrowcommit round-trip lost rows: {n_back} != {n_src}"
-            )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return spark.createDataFrame([(n_back,)], "rows_roundtripped long")
-
-
-SINK_AUDIT = {
-    "sink_arrowcommit_events_roundtrip": (
-        ["events"],
-        _sink_arrowcommit_roundtrip,
-    ),
 }
 
 
@@ -160,30 +114,22 @@ def _settled_app_totals(spark, timeout_sec: float = 5.0) -> tuple[int, int]:
 
 
 def measure_app_delta(
-    spark, sf_dir: str, stream_audit: dict | None = None,
-    sink_audit: dict | None = None, queries=None,
+    spark, sf_dir: str, stream_audit: dict | None = None, queries=None,
 ) -> dict:
-    """App-level-delta measurement for STREAM_AUDIT (registry queries)
-    and SINK_AUDIT (local callables); same stats shape as measure()."""
+    """App-level-delta measurement for STREAM_AUDIT (registry queries);
+    same stats shape as measure()."""
     from irs_990_efiler_database_spark.caching import release_cached
     from irs_990_efiler_database_spark.queries import all_queries
 
     qs = queries if queries is not None else all_queries()
-    items: list[tuple[str, list[str], object]] = []
+    out = {}
     for name, tables in (
         stream_audit if stream_audit is not None else STREAM_AUDIT
     ).items():
-        items.append((name, tables, qs[name]))
-    for name, (tables, fn) in (
-        sink_audit if sink_audit is not None else SINK_AUDIT
-    ).items():
-        items.append((name, tables, fn))
-    out = {}
-    for name, tables, fn in items:
         release_cached()
         spark.catalog.clearCache()
         sw0, sp0 = _settled_app_totals(spark)
-        df = fn(spark, sf_dir)
+        df = qs[name](spark, sf_dir)
         df.collect()
         sw1, sp1 = _settled_app_totals(spark)
         inp = _input_bytes(sf_dir, tables)
@@ -200,15 +146,13 @@ def measure_app_delta(
 
 
 def _input_bytes(sf_dir: str, tables: list[str]) -> int:
-    total = 0
-    for t in tables:
-        p = Path(sf_dir) / f"{t}.parquet"
-        total += (
-            sum(f.stat().st_size for f in p.rglob("*") if f.is_file())
-            if p.is_dir()
-            else p.stat().st_size
-        )
-    return total
+    from irs_990_efiler_database_spark.catalog import input_bytes, table_path
+
+    sizes = {t: input_bytes(table_path(sf_dir, t)) for t in tables}
+    missing = [t for t, b in sizes.items() if b is None]
+    if missing:
+        raise FileNotFoundError(f"cannot size {missing} under {sf_dir}")
+    return sum(sizes.values())
 
 
 def measure(spark, sf_dir: str, audit: dict | None = None, queries=None) -> dict:
