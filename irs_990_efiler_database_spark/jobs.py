@@ -32,7 +32,13 @@ from pyspark.sql import types as T
 from .extract.core_builder import build_core
 from .extract.rdb_builder import build_rdb_table
 from .extract.schedn_builder import build_schedn_table, schedn_table_names
-from .plans.concordance import load_core_spec, master_table_names, table_names
+from .plans.concordance import (
+    load_core_spec,
+    master_table_names,
+    register_catalog_many_table,
+    register_master_table,
+    table_names,
+)
 from .sinks import read_table, write_csv, write_dead_letter, write_table
 from .sources.index import filter_index
 from .sources.xml_source import (
@@ -59,7 +65,33 @@ class BuildResult:
     dead_rows: int = 0
 
 
-def _all_builders():
+def _all_builders(selected: list[str]) -> dict[str, tuple]:
+    """Every buildable table's (builder, partition columns), with each
+    name in *selected* resolved. A selected name that is not a
+    concordance / Schedule N / registered slice may name a
+    master-concordance LOCATION or a derived-catalog MANY slice
+    (``MC-<LOCATION>[-MANY]``) directly; it is registered here.
+
+    Both builds call this BEFORE their source read or stream start:
+    registration clears the cached superset parse schema, so the
+    slice's xpaths have to be registered before the parse."""
+    known = {"CORE", *table_names(), *schedn_table_names(), *master_table_names()}
+    for t in selected:
+        if t in known:
+            continue
+        try:
+            if t.startswith("MC-"):
+                # group roots come from metadata/master_many_catalog.json
+                loc = t[3:-5] if t.endswith("-MANY") else t[3:]
+                register_catalog_many_table(loc, table_name=t)
+            else:
+                register_master_table(t)
+        except KeyError:
+            raise KeyError(
+                f"unknown table {t!r}: not a buildable table, a "
+                "master-concordance LOCATION, or a derived-catalog "
+                f"MANY slice (MC-<LOCATION>) (known: {', '.join(sorted(known))})"
+            ) from None
     core_cols = list(dict.fromkeys(load_core_spec()["columns"]))
     builders: dict[str, tuple] = {
         # CORE partitions on FISYR (its tax-year column); writing needs
@@ -75,9 +107,10 @@ def _all_builders():
             ("FISYR", "FORMTYPE"),
         )
     # registered master-concordance slices (Schedule A, 990PF, any
-    # runtime-registered location): buildable via tables=[...] but NOT
-    # in the default build set — the default stays at reference parity
-    # (CORE + PartVII + SchedJ + SchedN, :5135-5163)
+    # runtime-registered location, the ones registered above): buildable
+    # via tables=[...] but NOT in the default build set — the default
+    # stays at reference parity (CORE + PartVII + SchedJ + SchedN,
+    # :5135-5163)
     for t in master_table_names():
         builders[t] = (lambda r, _t=t: build_rdb_table(r, _t), ("TAXYR", "FORMTYPE"))
     return builders
@@ -234,43 +267,8 @@ def build_database(
     """
     if (xml_glob is None) == (bundle_path is None):
         raise ValueError("exactly one of xml_glob / bundle_path required")
-    builders = _all_builders()
     selected = tables if tables is not None else _default_tables()
-    # auto-register BEFORE the source read: a requested table that is
-    # not a concordance / Schedule N / registered slice may name a
-    # master-concordance LOCATION directly (the `register` CLI
-    # advertises exactly this workflow, and registrations are
-    # per-process). Registration clears the cached superset parse
-    # schema, so it must precede read_return_xml_files — the slice's
-    # xpaths have to be in the parse struct.
-    for t in selected:
-        if t not in builders:
-            from .plans.concordance import (
-                register_catalog_many_table,
-                register_master_table,
-            )
-
-            try:
-                if t.startswith("MC-"):
-                    # derived-catalog MANY slice by canonical name
-                    # (MC-<LOCATION>[-MANY]): group roots come from
-                    # metadata/master_many_catalog.json — no
-                    # hand-declared group_roots needed
-                    loc = t[3:-5] if t.endswith("-MANY") else t[3:]
-                    register_catalog_many_table(loc, table_name=t)
-                else:
-                    register_master_table(t)
-            except KeyError:
-                known = ", ".join(sorted(builders))
-                raise KeyError(
-                    f"unknown table {t!r}: not a buildable table, a "
-                    "master-concordance LOCATION, or a derived-catalog "
-                    f"MANY slice (MC-<LOCATION>) (known: {known})"
-                ) from None
-            builders[t] = (
-                lambda r, _t=t: build_rdb_table(r, _t),
-                ("TAXYR", "FORMTYPE"),
-            )
+    builders = _all_builders(selected)
     returns = (
         read_return_xml_files(spark, xml_glob)
         if xml_glob is not None
@@ -316,8 +314,8 @@ def build_database_incremental(
     ``rows``/``dead_rows`` count documents processed by THIS run (a
     catch-up run over an already-current landing dir reports 0).
     """
-    builders = _all_builders()
     selected = tables if tables is not None else _default_tables()
+    builders = _all_builders(selected)
     out = out_dir.rstrip("/")
     result = BuildResult()
     for name in selected:
@@ -375,9 +373,10 @@ def validate_database(spark: SparkSession, out_dir: str) -> dict[str, int]:
     {check_name: violation_count} — all zeros means publishable.
 
     The reference has no automated validation at all (bad documents
-    surface as downstream NA storms); here the checks run as a handful
-    of count aggregations over the partitioned parquet, so the gate
-    costs one scan per table at any scale. Checks:
+    surface as downstream NA storms); here every check is one
+    conditional count in ONE action over ONE scan of CORE: a per-URL
+    aggregation carries the row checks' counts, and a global sum over
+    it adds the duplicate-URL count. Checks:
 
     - core_ein_format: EIN must be 9 digits
     - core_url_unique: URL is the document key — no duplicates
@@ -385,17 +384,25 @@ def validate_database(spark: SparkSession, out_dir: str) -> dict[str, int]:
     - core_formtype_known: FORMTYPE is one of the program's forms
     """
     core = read_table(spark, f"{out_dir}/CORE")
-    checks: dict[str, int] = {}
-    checks["core_ein_format"] = core.filter(
-        ~F.col("EIN").rlike(r"^\d{9}$")
-    ).count()
-    checks["core_url_unique"] = (
-        core.groupBy("URL").count().filter(F.col("count") > 1).count()
+    fisyr = F.col("FISYR").cast("int")
+    row_checks = {
+        "core_ein_format": ~F.col("EIN").rlike(r"^\d{9}$"),
+        "core_fisyr_range": (fisyr < 2009) | (fisyr > 2035),
+        "core_formtype_known": ~F.col("FORMTYPE").isin("990", "990EZ", "990PF"),
+    }
+    per_url = core.groupBy("URL").agg(
+        F.count(F.lit(1)).alias("n"),
+        *(F.count_if(bad).alias(name) for name, bad in row_checks.items()),
     )
-    checks["core_fisyr_range"] = core.filter(
-        (F.col("FISYR").cast("int") < 2009) | (F.col("FISYR").cast("int") > 2035)
-    ).count()
-    checks["core_formtype_known"] = core.filter(
-        ~F.col("FORMTYPE").isin("990", "990EZ", "990PF")
-    ).count()
-    return checks
+    totals = per_url.agg(
+        F.count_if(F.col("n") > 1).alias("core_url_unique"),
+        *(F.sum(name).alias(name) for name in row_checks),
+    ).collect()[0]
+    names = (
+        "core_ein_format",
+        "core_url_unique",
+        "core_fisyr_range",
+        "core_formtype_known",
+    )
+    # an empty CORE sums to NULL
+    return {name: int(totals[name] or 0) for name in names}

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..extract.golden import typed_values_sql
-from ..sources.index import build_index, filter_index
+from ..sources.index import build_index, filter_index, read_index_files
 from . import register
 
 _FIXTURES = (
@@ -264,30 +264,12 @@ def idx_yearly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def idx_pushdown_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark-4.1 Python DataSource FILTER PUSHDOWN end-to-end under the
-    oracle gate: the opt-in pushdown reader
-    (sources/pydatasource.Irs990IndexPushdownReader) evaluates the In /
-    GreaterThanOrEqual / IsNotNull predicates during the executor-side
-    parse — rows drop before Arrow serialization to the JVM — and the
-    range predicate additionally bounds file-level pruning when the
-    verified ``_objectid_prefixes.json`` manifest exists (absent here:
-    every file is conservatively opened, row filters stay exact).
-
-    ``spark.sql.python.filterPushdown.enabled`` is set and left set: it
-    only activates for readers that *implement* pushFilters, which this
-    engine keeps opt-in behind .option("pushdown", "true"), so no other
-    registry query changes behavior."""
-    from ..sources.pydatasource import Irs990IndexDataSource
-
-    try:
-        spark.dataSource.register(Irs990IndexDataSource)
-    except Exception:
-        pass  # already registered in this session
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """The filtered index scan under the oracle gate: the executor-side
+    wholetext + ``from_json`` reader (``read_index_files``) with an
+    IN, a range and a null-test predicate over the raw rows, projected
+    and deduplicated."""
     return (
-        spark.read.format("irs990index")
-        .option("pushdown", "true")
-        .load(_GLOB)
+        read_index_files(spark, _GLOB)
         .filter(
             F.col("FormType").isin("990", "990EZ")
             & (F.col("ObjectId") >= "2014")

@@ -69,7 +69,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # partition values round-trip exactly as written (the 990 output
         # model is all-string; inference would read FISYR=2014 as int)

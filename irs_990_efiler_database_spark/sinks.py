@@ -69,10 +69,22 @@ def write_dead_letter(dead: DataFrame, path: str, mode: str = "overwrite") -> No
 def read_table(spark: SparkSession, path: str) -> DataFrame:
     """Re-read a sink table; the glob-concat chunk re-reader
     (bind_data, BUILD_SCRIPTS/README.md:388-409) is just this scan —
-    parquet directories ARE the concatenation."""
-    # keep partition values exactly as written (all-string output model)
-    spark.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
-    return spark.read.parquet(path)
+    parquet directories ARE the concatenation.
+
+    Partition values come back exactly as written (the all-string
+    output model): type inference is off while the relation resolves,
+    which is when Spark infers the partition columns, and the caller's
+    setting is restored before returning."""
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        return spark.read.parquet(path)
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
 
 
 def upsert_partitions(

@@ -7,7 +7,8 @@ object ``{"Filings<year>": [entry, ...]}``) are parsed on executors —
 one task per file via a wholetext read + ``F.from_json`` with a MAP
 root (the wrapping key varies per year, so a fixed struct schema can't
 name it). Everything downstream is columnar; the dedup is the only
-shuffle and runs on the full row hash.
+shuffle and runs on the full row hash. This is the engine's only
+index reader, and reading writes nothing into the index directory.
 
 Schema per Build-Efiler-Index.md:7-20 (strings + the live index's
 IsElectronic/IsAvailable booleans, :18-19).
@@ -60,22 +61,9 @@ def with_tax_year(index: DataFrame) -> DataFrame:
     )
 
 
-def build_index(
-    spark: SparkSession, path_glob: str, auto_manifest: bool = True
-) -> DataFrame:
-    """buildIndex analog: scan → distinct → TaxYear (:54-89).
-
-    ``auto_manifest`` (VERDICT r12 next-round #3): emit/refresh the
-    per-directory ``_objectid_prefixes.json`` pruning-evidence sidecars
-    as part of the build, so manifest-mode pushdown pruning has
-    evidence BY DEFAULT instead of by operator discipline. Best-effort
-    and idempotent: fresh evidence costs one stat per file; a remote
-    or read-only index directory is skipped silently (pruning then
-    keeps every file, which is always correct)."""
-    if auto_manifest:
-        from .pydatasource import ensure_objectid_prefix_manifest
-
-        ensure_objectid_prefix_manifest(path_glob)
+def build_index(spark: SparkSession, path_glob: str) -> DataFrame:
+    """buildIndex analog: scan → distinct → TaxYear (:54-89). A pure
+    read: the index directory is left exactly as it was."""
     return with_tax_year(read_index_files(spark, path_glob).dropDuplicates())
 
 
@@ -99,12 +87,9 @@ def build_index_from_urls(
     bookkeeping (:5047-5101) as data. Callers that require all years
     assert ``failures.isEmpty()``.
 
-    ``save_dir`` (VERDICT r12 next-round #3): also persist each
-    successfully fetched index file locally under its URL basename and
-    emit the ``_objectid_prefixes.json`` pruning-evidence sidecar over
-    them — the fetch is the moment local index files come into
-    existence, so the evidence exists by default for every later
-    pushdown read of that directory. Files stream through
+    ``save_dir``: also persist each successfully fetched index file
+    locally under its URL basename, so a later ``build_index`` can
+    re-read the year without fetching it again. Files stream through
     ``toLocalIterator`` (one ~25 MB yearly file in driver memory at a
     time, never the whole set)."""
     from ..caching import tracked_persist
@@ -122,24 +107,13 @@ def build_index_from_urls(
         import os
         from urllib.parse import urlparse
 
-        from .pydatasource import write_objectid_prefix_manifest
-
         os.makedirs(save_dir, exist_ok=True)
-        saved = 0
         for row in ok.select("url", "xml").toLocalIterator():
             base = os.path.basename(urlparse(row["url"]).path)
             tmp = os.path.join(save_dir, base + ".tmp")
             with open(tmp, "w", encoding="utf-8") as fh:
                 fh.write(row["xml"])
             os.replace(tmp, os.path.join(save_dir, base))
-            saved += 1
-        # only when something was actually saved: with every fetch
-        # failed the glob matches nothing and the manifest writer's
-        # FileNotFoundError would abort the build — violating the
-        # dead-letter contract that failures come back as DATA in
-        # ``failures``, never as an exception (ADVICE r13).
-        if saved:
-            write_objectid_prefix_manifest(os.path.join(save_dir, "*.json"))
     parsed = (
         ok.select(F.explode(F.from_json("xml", _MAP_SCHEMA)).alias("k", "filings"))
         .select(F.explode("filings").alias("f"))

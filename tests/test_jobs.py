@@ -544,6 +544,67 @@ def test_validate_database_green_on_fixture_build(result, spark):
     }
 
 
+def test_validate_database_is_one_action(result, spark):
+    """validate_database computes all four checks in ONE SQL execution
+    over one scan of CORE, not one action per check."""
+    from irs_990_efiler_database_spark.jobs import validate_database
+
+    _, out = result
+    tag = "validate_database one action"
+    sc = spark.sparkContext
+    sc.setJobDescription(tag)
+    try:
+        checks = validate_database(spark, str(out))
+    finally:
+        sc.setJobDescription(None)
+    assert checks == {k: 0 for k in checks} and len(checks) == 4
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    descs = [execs.apply(i).description() for i in range(execs.size())]
+    assert descs.count(tag) == 1
+
+
+def test_read_table_leaves_partition_inference_to_the_caller(spark, tmp_path):
+    """read_table returns partition values as written (strings) but
+    leaves the session's partition type inference as the caller set
+    it: a later read of an unrelated table still types its int
+    partition column."""
+    from pyspark.sql import functions as F
+
+    from irs_990_efiler_database_spark.sinks import read_table, write_table
+
+    ours, other = str(tmp_path / "ours"), str(tmp_path / "other")
+    write_table(
+        spark.range(4).select(
+            "id",
+            F.lit("2019").alias("FISYR"),
+            F.lit("2018").alias("TAXYR"),
+            (F.col("id") % 2).alias("_batch"),
+        ),
+        ours,
+        partition_by=("FISYR", "TAXYR", "_batch"),
+    )
+    spark.range(4).withColumn("p", (F.col("id") % 2).cast("int")).write.partitionBy(
+        "p"
+    ).parquet(other)
+
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        back = read_table(spark, ours)
+        types = {f.name: f.dataType.simpleString() for f in back.schema}
+        assert [types[c] for c in ("FISYR", "TAXYR", "_batch")] == ["string"] * 3
+        assert back.filter(F.col("_batch") == "1").count() == 2
+        assert spark.read.parquet(other).schema["p"].dataType.simpleString() == "int"
+        assert spark.conf.get(key) == "true"
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 def test_schema_evolution_merge_read(spark, tmp_path):
     """Schema evolution on the table path: a later writer adds a
     column; mergeSchema reads unify old and new files (old rows NULL
@@ -661,6 +722,44 @@ def test_incremental_build_handles_master_slice(spark, tmp_path):
     )
     sa = read_incremental_table(spark, res.tables["SCHED-A-PART-02"])
     assert {r["EIN"] for r in sa.collect()} == {"100000010", "100000011"}
+
+
+def test_incremental_build_resolves_tables_like_the_batch_build(
+    spark, tmp_path, monkeypatch
+):
+    """The incremental build resolves ``tables`` like the batch build:
+    a derived-catalog MANY slice named by ``MC-<LOCATION>-MANY`` is
+    registered before the stream starts and written beside CORE."""
+    import shutil
+
+    from irs_990_efiler_database_spark.jobs import (
+        build_database_incremental,
+        read_incremental_table,
+    )
+    from irs_990_efiler_database_spark.plans import concordance
+    from irs_990_efiler_database_spark.sources.xml_source import (
+        write_return_bundle,
+    )
+
+    name = "MC-IRS990ScheduleN-PART-02-MANY"
+    # start unregistered whatever ran before in this process
+    monkeypatch.delitem(concordance._MASTER_TABLES, name, raising=False)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    stage = tmp_path / "stage"
+    write_return_bundle(spark, "tests/fixtures/*.xml", str(stage), target_partitions=1)
+    shutil.copy(sorted(stage.glob("part-*.parquet"))[0], landing / "d.parquet")
+
+    res = build_database_incremental(
+        spark,
+        str(tmp_path / "out"),
+        str(landing),
+        str(tmp_path / "ckpt"),
+        tables=["CORE", name],
+    )
+    assert res.rows == {"CORE": N_FIX, name: 6}  # as the batch build's slice
+    assert read_incremental_table(spark, res.tables[name]).count() == 6
+    assert read_incremental_table(spark, res.tables["CORE"]).count() == N_FIX
 
 
 def test_cli_build_and_tables(spark, tmp_path, capsys):

@@ -71,7 +71,7 @@ def test_full_build_matches_golden_at_realistic_shape(
 
     returns = read_return_bundle(spark, realistic_bundle).persist()
     try:
-        builders = _all_builders()
+        builders = _all_builders(tables)
         spark_dfs = {t: builders[t][0](returns) for t in tables}
 
         # distributed golden: one pass over (url, xml), emitting
