@@ -11,6 +11,9 @@ no-op), and every downstream read prunes on tax_year/form_type.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_, or_
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -99,29 +102,69 @@ def upsert_partitions(
     replaces the prior version of that return; the reference's only
     recourse is a full rebuild of the year).
 
-    Mechanics: only partitions PRESENT in ``updates`` are touched —
-    the existing table is semi-joined to the updates' distinct
-    partition values (a broadcast join over partition columns, which
-    dynamic partition pruning turns into a pruned scan), matched keys
-    are dropped (anti-join), and the union is written back with
-    dynamic partition overwrite. Untouched partitions' files are never
-    read or rewritten, so the cost is proportional to the amended
-    partitions, not the table."""
+    Mechanics, one pass whose cost follows the update batch:
+
+    - ``updates`` is evaluated once: it is cached, and one driver
+      ``collect`` of its partition and key columns fills the cache;
+    - the table is read with literal predicates: a null-safe match on
+      the batch's partition values (pruned at planning, so untouched
+      partitions' files are never read or rewritten; the Hive default
+      partition, read back as NULL, matches a NULL value) and a
+      predicate that drops the batch's keys (a NULL key never matches,
+      so an existing row with a NULL key is kept);
+    - the kept rows and the updates are written once by
+      :func:`write_table`'s dynamic partition overwrite. Its tasks
+      write under ``.spark-staging-*`` and each affected partition is
+      swapped in at job commit, after every read task has finished; a
+      failed job leaves the table as it was.
+
+    The batch is DRIVER-SIZED: its partition values and keys are
+    collected and become literals in the read. A year-sized reload
+    goes through ``jobs.build_database``.
+
+    Every ``key_cols`` and ``partition_by`` name must be a column of
+    both the table and ``updates``, else ``ValueError``; both must be
+    non-empty (an unpartitioned overwrite would replace the table it
+    reads)."""
     existing = read_table(spark, path)
-    part_cols = [c for c in partition_by if c in updates.columns]
-    keys = [c for c in key_cols if c in existing.columns]
-    affected = existing.join(
-        F.broadcast(updates.select(*part_cols).distinct()), part_cols, "left_semi"
-    )
-    keep = affected.join(
-        F.broadcast(updates.select(*keys).distinct()), keys, "left_anti"
-    )
-    merged = keep.unionByName(updates.select(*existing.columns))
-    # the write overwrites files the plan reads — materialize the
-    # merged partitions (executor-local blocks, affected partitions
-    # only) and truncate lineage before touching the directory
-    merged = merged.localCheckpoint(eager=True)
-    write_table(merged, path, partition_by=tuple(part_cols))
+    missing = [
+        c
+        for c in (*key_cols, *partition_by)
+        if c not in existing.columns or c not in updates.columns
+    ]
+    if missing or not key_cols or not partition_by:
+        raise ValueError(
+            f"upsert_partitions: key_cols {list(key_cols)} and partition_by "
+            f"{list(partition_by)} must be non-empty columns of both the "
+            f"table at {path} and the updates; missing: {missing}"
+        )
+    batch = updates.select(*existing.columns).persist()
+    try:
+        n = len(partition_by)
+        rows = batch.select(*partition_by, *key_cols).collect()
+        if not rows:
+            return
+        parts = {tuple(r[:n]) for r in rows}
+        # a key tuple holding a NULL matches nothing, as in a join
+        keys = {tuple(r[n:]) for r in rows if None not in r[n:]}
+        affected = reduce(
+            or_,
+            (
+                reduce(and_, (F.col(c).eqNullSafe(v) for c, v in zip(partition_by, p)))
+                for p in parts
+            ),
+        )
+        types = {c: existing.schema[c].dataType for c in key_cols}
+        updated = F.struct(*key_cols).isin(
+            [
+                F.struct(*(F.lit(v).cast(types[c]).alias(c) for c, v in zip(key_cols, k)))
+                for k in keys
+            ]
+        )
+        keep = existing.where(affected & ~updated)
+        write_table(keep.unionByName(batch), path, partition_by=partition_by)
+    finally:
+        batch.unpersist()
 
 
 def write_stata(df: DataFrame, path: str, version: int = 118) -> None:

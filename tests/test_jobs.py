@@ -266,6 +266,144 @@ def test_upsert_partitions_amends_in_place(spark, tmp_path):
     assert read_table(spark, path).count() == 4
 
 
+_UPSERT_COLS = ["OBJECT_ID", "NAME", "FISYR", "FORMTYPE"]
+
+
+def _upsert_table(spark, tmp_path, rows):
+    from irs_990_efiler_database_spark.sinks import write_table
+
+    path = str(tmp_path / "CORE")
+    df = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in _UPSERT_COLS))
+    write_table(df, path, partition_by=("FISYR", "FORMTYPE"))
+    return path
+
+
+def _upsert_rows(spark, path):
+    from irs_990_efiler_database_spark.sinks import read_table
+
+    return sorted(tuple(r) for r in read_table(spark, path).select(*_UPSERT_COLS).collect())
+
+
+def test_upsert_partitions_keeps_rows_of_the_null_partition(spark, tmp_path):
+    """An update whose partition value is NULL (the Hive default
+    partition) replaces only its key there: the partition's other rows
+    are kept."""
+    from irs_990_efiler_database_spark.sinks import upsert_partitions
+
+    path = _upsert_table(
+        spark,
+        tmp_path,
+        [
+            ("o1", "ONE", "2014", None),
+            ("o2", "TWO", "2014", None),
+            ("o3", "THREE", "2014", "990"),
+        ],
+    )
+    updates = spark.createDataFrame(
+        [("o2", "TWO AMENDED", "2014", None)],
+        ", ".join(f"{c} string" for c in _UPSERT_COLS),
+    )
+    upsert_partitions(
+        spark, path, updates, key_cols=("OBJECT_ID",),
+        partition_by=("FISYR", "FORMTYPE"),
+    )
+    assert _upsert_rows(spark, path) == [
+        ("o1", "ONE", "2014", None),
+        ("o2", "TWO AMENDED", "2014", None),
+        ("o3", "THREE", "2014", "990"),
+    ]
+
+
+def test_upsert_partitions_rejects_unknown_column_names(spark, tmp_path):
+    """A misspelled key or partition column fails closed with one
+    ValueError naming it, and the table is left as it was."""
+    from irs_990_efiler_database_spark.sinks import upsert_partitions
+
+    rows = [("o1", "ONE", "2014", "990")]
+    path = _upsert_table(spark, tmp_path, rows)
+    updates = spark.createDataFrame(
+        [("o1", "ONE AMENDED", "2014", "990")], _UPSERT_COLS
+    )
+    for keys, parts, bad in (
+        (("OBJECTID",), ("FISYR", "FORMTYPE"), "OBJECTID"),
+        (("OBJECT_ID",), ("FISYR", "FORMTYP"), "FORMTYP"),
+    ):
+        with pytest.raises(ValueError, match=bad):
+            upsert_partitions(spark, path, updates, key_cols=keys, partition_by=parts)
+    assert _upsert_rows(spark, path) == [("o1", "ONE", "2014", "990")]
+    assert sorted(p.name for p in (tmp_path / "CORE" / "FISYR=2014").iterdir()) == [
+        "FORMTYPE=990"
+    ]
+
+
+def test_upsert_partitions_evaluates_updates_once(spark, tmp_path):
+    """The caller's update plan runs once: a counting Python UDF in its
+    filter sees each update row exactly once."""
+    from pyspark.sql import functions as F
+
+    from irs_990_efiler_database_spark.sinks import upsert_partitions
+
+    path = _upsert_table(
+        spark, tmp_path, [("o1", "ONE", "2014", "990"), ("o2", "TWO", "2012", "990")]
+    )
+    seen = spark.sparkContext.accumulator(0)
+
+    def count(object_id):
+        seen.add(1)
+        return True
+
+    counted = F.udf(count, "boolean")
+    updates = spark.createDataFrame(
+        [("o1", "ONE AMENDED", "2014", "990"), ("o9", "NINE", "2012", "990")],
+        _UPSERT_COLS,
+    ).where(counted("OBJECT_ID"))
+    upsert_partitions(
+        spark, path, updates, key_cols=("OBJECT_ID",),
+        partition_by=("FISYR", "FORMTYPE"),
+    )
+    assert seen.value == 2
+    assert _upsert_rows(spark, path) == [
+        ("o1", "ONE AMENDED", "2014", "990"),
+        ("o2", "TWO", "2012", "990"),
+        ("o9", "NINE", "2012", "990"),
+    ]
+
+
+def test_upsert_partitions_failed_rewrite_leaves_table_intact(spark, tmp_path):
+    """A rewrite job that fails mid-write (one affected partition holds
+    a truncated parquet file) raises, every other partition reads back
+    its pre-upsert rows, and no staging directory is left behind."""
+    from irs_990_efiler_database_spark.sinks import upsert_partitions
+
+    rows = [
+        ("o1", "ONE", "2012", "990"),  # untouched
+        ("o2", "TWO", "2014", "990"),  # affected, truncated below
+        ("o3", "THREE", "2014", "990EZ"),  # affected
+    ]
+    path = _upsert_table(spark, tmp_path, rows)
+    table = tmp_path / "CORE"
+    # the 2012 partition sorts first, so the schema comes from its footer
+    # and the failure happens in the rewrite job, not at planning
+    for f in (table / "FISYR=2014" / "FORMTYPE=990").glob("*.parquet"):
+        f.write_bytes(f.read_bytes()[:64])
+    updates = spark.createDataFrame(
+        [("o2", "TWO AMENDED", "2014", "990"), ("o3", "THREE AMENDED", "2014", "990EZ")],
+        _UPSERT_COLS,
+    )
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        upsert_partitions(
+            spark, path, updates, key_cols=("OBJECT_ID",),
+            partition_by=("FISYR", "FORMTYPE"),
+        )
+    assert not list(table.glob(".spark-staging-*"))
+    for part, want in (
+        ("FISYR=2012/FORMTYPE=990", [("o1", "ONE", "2012", "990")]),
+        ("FISYR=2014/FORMTYPE=990EZ", [("o3", "THREE", "2014", "990EZ")]),
+    ):
+        back = spark.read.parquet(str(table / part)).collect()
+        assert [(r["OBJECT_ID"], r["NAME"]) for r in back] == [w[:2] for w in want]
+
+
 def test_dead_letter_rerun_is_idempotent(result, spark):
     """Re-running build_database on the same out_dir must not
     accumulate duplicate dead-letter rows (same idempotent-restart
