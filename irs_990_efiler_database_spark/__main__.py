@@ -49,8 +49,8 @@ def cmd_index(args) -> int:
 
     spark = _session(args)
     idx = build_index(spark, args.glob)
-    write_table(idx, args.out, partition_by=None)
-    print(f"index: {idx.count()} rows -> {args.out}")
+    n = write_table(idx, args.out, partition_by=None)
+    print(f"index: {n} rows -> {args.out}")
     return 0
 
 

@@ -15,6 +15,11 @@ into ~1000 parts, try()/redo lists, and per-chunk RDS files is here:
 - PERMISSIVE parse + dead-letter table (no try()/FAIL_LIST);
 - dynamic partition overwrite (no chunk/restart bookkeeping — re-running
   a year replaces exactly that year's partitions);
+- files sized by bytes, not one per chunk: ``sinks.write_table`` is the
+  only code that decides file layout. It rebalances every table on its
+  partition columns and AQE sizes the write, so each partition
+  directory (per micro-batch) gets one file until it outgrows the
+  advisory partition size; no task count is set here;
 - the multi-year "separate R instances" parallelism (README.md:258) is
   just executor parallelism over one job.
 """
@@ -25,7 +30,7 @@ from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
 
 from pyspark.errors import StreamingQueryException
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -122,15 +127,6 @@ def _default_tables() -> list[str]:
     )
 
 
-# write tasks per table: extraction tables are DIMENSION-sized next to
-# the raw XML (a few hundred columns, one row per filing), so writing
-# them at the parse's partition count fans out tiny files and pays the
-# per-task commit latency once per partition and table — measured 3x
-# end to end on the 2000-doc build (10.0 → 3.3 s). coalesce (not
-# repartition) keeps the write shuffle-free
-_WRITE_TASKS = 8
-
-
 def _exists(spark: SparkSession, path: str) -> bool:
     """Whether *path* exists, asked through the Hadoop FS API (local,
     S3A, HDFS) like ``sources.xml_source.expand_glob``."""
@@ -158,9 +154,12 @@ def _write_batch(
     that cache (distinct output paths; the BlockManager's
     per-partition locks make concurrent cache fills compute each
     parse partition once), submitted to one pool so their fixed
-    job-setup/commit latency overlaps. Each table is coalesced to
-    ``_WRITE_TASKS`` write tasks and its rows are counted DURING the
-    write (``Observation``), not by a second scan.
+    job-setup/commit latency overlaps. The file layout is
+    ``write_table``'s one rule: each table is rebalanced on its
+    partition columns and AQE sizes the write tasks, so a partition
+    directory gets one file per batch; the stage that fills the parse
+    cache runs one task per input partition. ``write_table`` also
+    returns the rows it wrote, counted during the write.
 
     ``batch_id`` (micro-batches) adds the ``_batch`` column. Every
     write partitions by ``(*table partitions, "_batch")`` and
@@ -189,16 +188,10 @@ def _write_batch(
 
         def write_one(name: str) -> tuple[str, int]:
             build, part_cols = builders[name]
-            df = tag(build(ok)).coalesce(_WRITE_TASKS)
+            df = tag(build(ok))
             path = f"{out}/{name}"
             existed = _exists(spark, path)
-            obs = Observation()
-            write_table(
-                df.observe(obs, F.count(F.lit(1)).alias("n")),
-                path,
-                partition_by=(*part_cols, "_batch"),
-            )
-            n = int(obs.get["n"])
+            n = write_table(df, path, partition_by=(*part_cols, "_batch"))
             if n == 0 and not existed:
                 write_table(df, path, partition_by=None)
             if csv:

@@ -14,7 +14,7 @@ from __future__ import annotations
 from functools import reduce
 from operator import and_, or_
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_PARTITION_COLS = ("TAXYR", "FORMTYPE")
@@ -25,34 +25,60 @@ def write_table(
     path: str,
     partition_by: tuple[str, ...] | None = DEFAULT_PARTITION_COLS,
     mode: str = "overwrite",
-) -> None:
-    """Partitioned parquet sink (replaces saveRDS, :5136-5148).
+) -> int:
+    """Partitioned parquet sink (replaces saveRDS, :5136-5148). Returns
+    the number of rows written.
 
     Partition values are preserved as-is; rows whose partition column
     is NULL land in the Hive default partition and round-trip as NULL.
+    Partition columns the frame lacks are dropped from ``partition_by``.
+
+    File layout is decided here and nowhere else, by one rule: the
+    frame is rebalanced on its partition columns (round-robin when it
+    has none) and AQE sizes the write tasks (``RebalancePartitions``).
+    Every row of one partition value goes to one write task, so a
+    partition directory gets one file, split only when it outgrows
+    ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. AQE coalesces
+    the small shuffle partitions: while
+    ``spark.sql.adaptive.coalescePartitions.parallelismFirst`` holds
+    (Spark's default) it keeps up to the default parallelism of tasks
+    of at least ``coalescePartitions.minPartitionSize``, else it packs
+    them to the advisory size. The stage feeding the rebalance keeps
+    its input's partitioning, so a write never narrows the scan or the
+    parse upstream of it.
+
+    Rows are counted DURING the write by an ``Observation`` above the
+    rebalance, not by a second scan.
 
     Dynamic overwrite is set per-write (writer option), never on the
     shared session conf — a session-level set would silently change
     the truncation semantics of every later partitioned overwrite in
     the same session.
     """
-    w = df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
     cols = [c for c in (partition_by or ()) if c in df.columns]
+    obs = Observation()
+    counted = df.hint("rebalance", *cols).observe(obs, F.count(F.lit(1)).alias("n"))
+    w = counted.write.mode(mode).option("partitionOverwriteMode", "dynamic")
     if cols:
         w = w.partitionBy(*cols)
     w.parquet(path)
+    return int(obs.get["n"])
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """CSV sink (replaces write.csv, :5151-5163). Single-header CSV
-    directory; arrays/structs are not CSV-able so flat tables only."""
-    df.write.mode(mode).option("header", True).csv(path)
+    directory; arrays/structs are not CSV-able so flat tables only.
+    Its files are sized by :func:`write_table`'s rule: a round-robin
+    rebalance that AQE sizes."""
+    df.hint("rebalance").write.mode(mode).option("header", True).csv(path)
 
 
 def write_dead_letter(dead: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Dead-letter sink (FAIL_LIST.csv analog, :5096-5101): parquet of
     (url, xml, reason, captured_at) for replay, written by
-    :func:`write_table` partitioned by ``_batch``.
+    :func:`write_table` partitioned by ``_batch``, so its files are
+    sized by the same rule as the tables' (one file per ``_batch``
+    directory, or round-robin sized by AQE when unpartitioned).
 
     A frame without ``_batch`` (the batch build, ``fetch_to_bundle``)
     is written unpartitioned, overwrite-per-run, so the DEAD-LETTER
@@ -202,93 +228,3 @@ def write_spss(df: DataFrame, path: str) -> None:
             "dependency-free alternatives"
         ) from exc
     pyreadstat.write_sav(pdf, path)
-
-
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    partition_by: tuple[str, ...] = (),
-) -> int:
-    """Small-file compaction: rewrite a parquet table so each output
-    file approaches ``target_file_bytes``. Returns the file count
-    written.
-
-    The reference's chunked build (BUILD_SCRIPTS/README.md:294-355)
-    emits one output per chunk; an incremental/streaming build emits
-    one per micro-batch. At 100 TB that accretes millions of KB-sized
-    files and scan planning — not I/O — becomes the bottleneck (one
-    footer read + one task per file). Compaction is the standing
-    maintenance job.
-
-    Unpartitioned tables rewrite with a round-robin repartition sized
-    from the on-disk bytes (no keys, so no skew). Partitioned tables
-    compact PER PARTITION: each partition directory's byte total sets
-    its own file count (a global round-robin would scatter every
-    partition's rows across every task and re-fragment the layout into
-    up-to-n files per partition value), implemented as one shuffle on
-    (partition cols, deterministic hash salt mod that partition's file
-    count).
-
-    The swap is rename-ordered (write tmp sibling → rename live dir
-    aside → rename tmp in → delete old), so on a POSIX filesystem each
-    step is atomic and the table is absent only between the two
-    renames — microseconds, and crash-recoverable since both old and
-    new data still exist under sibling names. BEST-EFFORT, not a
-    transaction: a reader that lists the directory inside that window
-    fails and retries; true atomicity needs a table format with a
-    metadata pointer (Delta/Iceberg)."""
-    import math
-    import os
-    import shutil
-    from pathlib import Path
-
-    p = Path(path)
-    data_files = [f for f in p.rglob("*.parquet") if f.is_file()]
-    df = spark.read.parquet(path)
-    pcols = [c for c in partition_by if c in df.columns]
-    tmp = p.with_name(p.name + "._compacting")
-    if not pcols:
-        total_bytes = sum(f.stat().st_size for f in data_files)
-        n_files = max(1, math.ceil(total_bytes / target_file_bytes))
-        df.repartition(n_files).write.mode("overwrite").parquet(str(tmp))
-    else:
-        # per-partition byte totals from the hive directory layout
-        sizes: dict[tuple[str, ...], int] = {}
-        for f in data_files:
-            key = tuple(
-                part.split("=", 1)[1]
-                for part in f.relative_to(p).parts
-                if "=" in part
-            )
-            sizes[key] = sizes.get(key, 0) + f.stat().st_size
-        plan_rows = [
-            (*k, max(1, math.ceil(b / target_file_bytes)))
-            for k, b in sizes.items()
-        ]
-        n_files = sum(r[-1] for r in plan_rows)
-        plan = spark.createDataFrame(
-            plan_rows, [*(f"_p_{c}" for c in pcols), "_nf"]
-        )
-        # join the per-partition file budget on the hive-encoded string
-        # values, then salt deterministically (hash of the non-partition
-        # payload) so each partition value fans into exactly its budget
-        cond = [
-            F.col(c).cast("string").eqNullSafe(F.col(f"_p_{c}"))
-            for c in pcols
-        ]
-        payload = [c for c in df.columns if c not in pcols]
-        salted = (
-            df.join(F.broadcast(plan), cond)
-            .withColumn(
-                "_salt", F.pmod(F.abs(F.hash(*payload)), F.col("_nf"))
-            )
-            .repartition(n_files, *pcols, F.col("_salt"))
-            .drop("_nf", "_salt", *[f"_p_{c}" for c in pcols])
-        )
-        salted.write.mode("overwrite").partitionBy(*pcols).parquet(str(tmp))
-    bak = p.with_name(p.name + "._precompact")
-    os.rename(p, bak)
-    os.rename(tmp, p)
-    shutil.rmtree(bak)
-    return n_files

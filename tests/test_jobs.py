@@ -4,6 +4,9 @@ parquet + dead-letter → re-read equals direct builder output
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from pathlib import Path
+
 import pytest
 
 from irs_990_efiler_database_spark.extract.core_builder import build_core
@@ -575,97 +578,6 @@ def test_spss_export_roundtrip_or_clear_degrade(spark, tmp_path):
 
     pdf, _ = pyreadstat.read_sav(out)
     assert len(pdf) == df.count()
-
-
-def test_compact_table_reduces_files_and_preserves_rows(spark, tmp_path):
-    """64 tiny files -> a handful sized by the byte target; the rows
-    and values survive byte-for-byte (hash-compared)."""
-    from pyspark.sql import functions as F
-
-    from irs_990_efiler_database_spark.catalog import load_table
-    from irs_990_efiler_database_spark.sinks import compact_table
-    from tests.conftest import SF_SMOKE
-
-    path = str(tmp_path / "frag")
-    src = load_table(spark, SF_SMOKE, "orders")
-    src.repartition(64).write.parquet(path)
-    from pathlib import Path
-
-    assert len(list(Path(path).rglob("*.parquet"))) >= 64
-    before = (
-        spark.read.parquet(path)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.crc32(F.to_json(F.struct("*")))).alias("h"),
-        )
-        .collect()[0]
-    )
-    n_files = compact_table(spark, path, target_file_bytes=256 * 1024)
-    got_files = list(Path(path).rglob("*.parquet"))
-    assert len(got_files) == n_files < 64
-    after = (
-        spark.read.parquet(path)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.crc32(F.to_json(F.struct("*")))).alias("h"),
-        )
-        .collect()[0]
-    )
-    assert (before["n"], before["h"]) == (after["n"], after["h"])
-
-
-def test_compact_table_partitioned_compacts_within_partitions(spark, tmp_path):
-    """Partitioned compaction must size file counts PER PARTITION
-    DIRECTORY (a global round-robin re-fragments: n files in every
-    partition value). Small partitions collapse to one file each; rows
-    and values survive."""
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    from irs_990_efiler_database_spark.catalog import load_table
-    from irs_990_efiler_database_spark.sinks import compact_table
-    from tests.conftest import SF_SMOKE
-
-    path = str(tmp_path / "fragp")
-    src = load_table(spark, SF_SMOKE, "orders").withColumn(
-        "status", F.col("o_orderstatus")
-    )
-    src.repartition(16).write.partitionBy("status").parquet(path)
-    statuses = [
-        d.name.split("=", 1)[1]
-        for d in Path(path).iterdir()
-        if d.name.startswith("status=")
-    ]
-    assert all(
-        len(list((Path(path) / f"status={s}").glob("*.parquet"))) >= 8
-        for s in statuses
-    )
-    before = (
-        spark.read.parquet(path)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.crc32(F.to_json(F.struct("*")))).alias("h"),
-        )
-        .collect()[0]
-    )
-    compact_table(
-        spark, path, target_file_bytes=128 * 1024 * 1024,
-        partition_by=("status",),
-    )
-    # each (tiny) partition compacts to exactly its own budget: 1 file
-    for s in statuses:
-        files = list((Path(path) / f"status={s}").glob("*.parquet"))
-        assert len(files) == 1
-    after = (
-        spark.read.parquet(path)
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.crc32(F.to_json(F.struct("*")))).alias("h"),
-        )
-        .collect()[0]
-    )
-    assert (before["n"], before["h"]) == (after["n"], after["h"])
 
 
 def test_validate_database_green_on_fixture_build(result, spark):
@@ -1358,3 +1270,92 @@ def test_table_failure_is_attributed_in_both_builds(
             str(tmp_path / "ckpt"),
             tables=[*good, bad],
         )
+
+
+@contextmanager
+def _one_partition_per_file(spark):
+    """Every fixture file (a few KB) becomes its own input partition
+    while the block runs; the caller's setting is restored after."""
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(64 * 1024))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def _input_partitions(spark) -> int:
+    from irs_990_efiler_database_spark.sources.xml_source import expand_glob
+
+    raw = spark.read.text(expand_glob(spark, GLOBS), wholetext=True)
+    return raw.rdd.getNumPartitions()
+
+
+def _files_per_dir(root: Path) -> dict[str, int]:
+    """{directory relative to *root*: parquet files in it}, for every
+    directory that holds parquet files."""
+    counts: dict[str, int] = {}
+    for f in root.rglob("*.parquet"):
+        d = str(f.parent.relative_to(root))
+        counts[d] = counts.get(d, 0) + 1
+    return counts
+
+
+def test_batch_build_writes_one_file_per_partition_directory(spark, tmp_path):
+    """The write rebalances every table on its partition columns, so a
+    partition directory gets ONE file however many input partitions
+    hold its rows — for every table and for DEAD-LETTER."""
+    out = tmp_path / "out"
+    with _one_partition_per_file(spark):
+        assert _input_partitions(spark) >= 2
+        res = build_database(spark, str(out), xml_glob=GLOBS)
+    assert res.rows["CORE"] == N_FIX and res.dead_rows == 1
+    for name in [*res.tables, "DEAD-LETTER"]:
+        counts = _files_per_dir(out / name)
+        assert counts, name
+        assert set(counts.values()) == {1}, (name, counts)
+
+
+def test_parse_cache_fill_runs_one_task_per_input_partition(spark, tmp_path):
+    """The first job of a build fills the parse cache. Its stage runs
+    one task per input partition: the write's rebalance is a shuffle,
+    so nothing narrows the parse to a fixed task count."""
+    tracker = spark.sparkContext.statusTracker()
+    with _one_partition_per_file(spark):
+        n_inputs = _input_partitions(spark)
+        assert n_inputs > 8
+        seen = set(tracker.getJobIdsForGroup())
+        build_database(spark, str(tmp_path / "out"), xml_glob=GLOBS, tables=["CORE"])
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    first = min(j for j in tracker.getJobIdsForGroup() if j not in seen)
+    stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(first).stageIds]
+    assert [s.numTasks for s in stages] == [n_inputs]
+
+
+def test_incremental_build_writes_the_same_files_for_the_same_input(
+    spark, tmp_path
+):
+    """Two incremental builds of one landing bundle, each into fresh
+    output and checkpoint directories, write the same number of files
+    in every directory."""
+    from irs_990_efiler_database_spark.jobs import build_database_incremental
+    from irs_990_efiler_database_spark.sources.xml_source import (
+        write_return_bundle,
+    )
+
+    landing = tmp_path / "landing"
+    write_return_bundle(spark, GLOBS, str(landing), target_partitions=N_FIX + 1)
+    layouts = []
+    with _one_partition_per_file(spark):
+        for run in ("a", "b"):
+            res = build_database_incremental(
+                spark,
+                str(tmp_path / run / "out"),
+                str(landing),
+                str(tmp_path / run / "ckpt"),
+            )
+            assert res.rows["CORE"] == N_FIX and res.dead_rows == 1
+            layouts.append(_files_per_dir(tmp_path / run / "out"))
+    assert layouts[0] == layouts[1]
+    assert set(layouts[0].values()) == {1}, layouts[0]
