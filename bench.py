@@ -337,7 +337,9 @@ def main() -> None:
                 "loadavg_end": _loadavg(),
                 "extract": extract_stats,
             }
-    payload.update(_vs_quietest_reference(timings, payload["sf"]))
+    payload.update(
+        _vs_quietest_reference(timings, payload["sf"], payload["cpus"])
+    )
     if payload.get("best_known_mc_sec") and calib_mc > 0:
         payload["mc_vs_best_known"] = round(
             calib_mc / payload["best_known_mc_sec"], 2
@@ -375,7 +377,7 @@ def main() -> None:
     spark.stop()
 
 
-def _vs_quietest_reference(timings: dict[str, float], sf) -> dict:
+def _vs_quietest_reference(timings: dict[str, float], sf, cpus) -> dict:
     """Mechanical round-over-round check (VERDICT r11 'what's wrong'
     #1): the single-thread contention probe understated a co-tenant
     multi-core load in r11 — the driver stamped 1.77 while 94 unchanged
@@ -393,7 +395,7 @@ def _vs_quietest_reference(timings: dict[str, float], sf) -> dict:
     # return {} rather than crash main() after every query already ran
     # — the same end-of-run-crash class the calibration min() guards
     try:
-        return _vs_quietest_reference_inner(timings, sf, statistics)
+        return _vs_quietest_reference_inner(timings, sf, cpus, statistics)
     except FileNotFoundError:
         return {}  # no history yet — the normal first-run case
     except Exception as e:
@@ -402,21 +404,25 @@ def _vs_quietest_reference(timings: dict[str, float], sf) -> dict:
 
 
 def _vs_quietest_reference_inner(
-    timings: dict[str, float], sf, statistics
+    timings: dict[str, float], sf, cpus, statistics
 ) -> dict:
-    lines = [
+    # like with like: only records of the same (sf, cpus) — sf0.001
+    # probe runs and other hosts' core counts are not comparable, and
+    # a record without ``cpus`` matches no run that has it
+    history = [
         json.loads(ln)
         for ln in (REPO / "BENCH_SUMMARY.jsonl").read_text().splitlines()
         if ln.strip()
     ]
+    lines = [
+        rec
+        for rec in history
+        if isinstance(rec, dict) and (rec.get("sf"), rec.get("cpus")) == (sf, cpus)
+    ]
     best: dict | None = None
     for rec in lines:
-        if not isinstance(rec, dict):
-            continue
         q = rec.get("queries") or {}
         c = rec.get("contention_ratio")
-        if rec.get("sf") != sf:  # sf0.001 probe runs are not comparable
-            continue
         if len(set(q) & set(timings)) < 20 or not isinstance(c, (int, float)):
             continue
         if c <= 0:
@@ -433,14 +439,13 @@ def _vs_quietest_reference_inner(
     # mc/single has a HARDWARE floor (~1.6 on this 32-core host: all-core
     # turbo downclock + memory bandwidth, measured at loadavg<1), so the
     # ratio can never reach the old <=1.2 quiet target; the ABSOLUTE mc
-    # probe value against the best ever recorded cancels the floor and
-    # is the honest co-tenant signal
+    # probe value against the best recorded at this (sf, cpus) cancels
+    # the floor and is the honest co-tenant signal
     best_mc = min(
         (
             rec["cpu_calibration_mc_sec"]
             for rec in lines
-            if isinstance(rec, dict)
-            and isinstance(rec.get("cpu_calibration_mc_sec"), (int, float))
+            if isinstance(rec.get("cpu_calibration_mc_sec"), (int, float))
             and rec["cpu_calibration_mc_sec"] > 0
         ),
         default=None,

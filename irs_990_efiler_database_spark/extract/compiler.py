@@ -23,7 +23,7 @@ columns take 0.3-0.4 s / 0.03 s either way.
 One walk resolves every path. ``walk`` takes a start node and the SQL
 of the value at that node, so document scalars (the schema root over
 the ``doc`` column), repeating-group roots and group-member leaves
-under an exploded ``_g`` share one one-open-array rule and one
+under the group lambda's ``_g`` share one one-open-array rule and one
 ``_VALUE`` descent. The walk reads only the driver-side
 XmlSchemaBuilder trie, so no JVM traffic happens until the final
 ``selectExpr``.
@@ -135,7 +135,7 @@ class ExprCompiler:
         ``start=None``: *path* is a document xpath walked from the
         schema root over the doc column. Otherwise *path* is a member
         rel-path walked from the group node ``start``, whose value is
-        the SQL ``base`` (the exploded ``_g``).
+        the SQL ``base`` (the lambda variable ``_g``).
 
         kind ∈ {text, value, struct, attr}; ``element=True`` stops at
         the element itself (kind ``element``) — never descending into
@@ -169,7 +169,7 @@ class ExprCompiler:
 
     def group(self, xpath: str) -> tuple[str, _Node]:
         """A repeating-group root → (SQL of its element array, node),
-        for ``explode`` plus member walks from the node."""
+        for the group's ``transform`` plus member walks from the node."""
         sql, _depth, node = self._descend(
             _strip(xpath), self.b.root, _q(self.doc), xpath
         )

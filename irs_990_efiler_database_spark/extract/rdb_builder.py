@@ -8,11 +8,11 @@ For a target table named in the concordance:
   multi-version coalesce (buildPartVII :4161-4414 / buildSchedJ
   :4424-4915 shape). Schedule-scoped tables are guarded on schedule
   presence (:4428).
-- MANY-cardinality → explode each repeating-group root (the roots are
-  inferred from the concordance by first-divergent-segment, :121-134),
-  extract each group member's leaves via the leaf→variable map
-  (:141-151), and union the per-root frames by name (ragged bind_rows
-  semantics, :5109-5122).
+- MANY-cardinality → one row per element of each repeating-group root
+  (the roots are inferred from the concordance by first-divergent
+  segment, :121-134), each member's leaves mapped to variables
+  (:141-151), all roots in ONE projection: the ragged bind_rows
+  (:5109-5122) as one scan of the parse.
 
 Every row carries the reference's six denormalized keys
 OBJECT_ID, EIN, NAME, TAXYR, FORMTYPE, URL (:269-270).
@@ -32,6 +32,7 @@ from ..sources.xml_source import build_return_schema
 from .compiler import (
     NUM_LEAF_SUFFIXES,
     ExprCompiler,
+    _q,
     aliased,
     leaf_names,
     sql_str,
@@ -93,51 +94,51 @@ def explode_groups(
     groups: dict[str, dict[str, list[str]]],
     types: dict[str, str | None],
 ) -> DataFrame:
-    """One frame per repeating group, unioned by name in group order
-    (NULL-fill for variables a group doesn't carry — the reference's
-    ragged bind_rows, :5109-5122).
+    """Every repeating group's rows from ONE projection, one scan of
+    the parse: the keys plus ``inline(concat(<term per group root>))``
+    (the reference's ragged bind_rows, :5109-5122).
 
     ``groups``: group-root xpath → {variable: member rel-paths};
-    ``types``: variable → typed-mode Spark type (None: string). Each
-    frame is two ``selectExpr`` projections: the keys plus
-    ``explode(<root>) AS _g``, then the keys plus every variable
-    compiled from the group node over ``_g``. One variable may have
-    several XSD-version rel-paths inside the same group
-    (BusinessNameLine1 vs BusinessNameLine1Txt); they coalesce, the
-    same multi-version P2 semantics as document scalars (reference
-    pipe-union, :332-336). A rel-path that crosses an INNER repeated
-    element (a node another registered table declares as a group root
-    — e.g. LiquidationDetail inside LiquidationTable) takes the FIRST
-    match in document order — the golden's _find_rel semantics.
+    ``types``: variable → typed-mode Spark type (None: string). A
+    root's term is ``transform(<root>, _g -> named_struct(<every
+    variable>))``; a variable the root doesn't carry is a NULL of its
+    type, so the terms must agree on types (the caller types each
+    variable globally). One variable may have several XSD-version
+    rel-paths inside the same group (BusinessNameLine1 vs
+    BusinessNameLine1Txt); they coalesce, the same multi-version P2
+    semantics as document scalars (reference pipe-union, :332-336). A
+    rel-path that crosses an INNER repeated element (a node another
+    registered table declares as a group root — e.g. LiquidationDetail
+    inside LiquidationTable) takes the FIRST match in document order —
+    the golden's _find_rel semantics.
 
     A group whose only member is the empty rel-path diverges at the
-    leaf itself (e.g. the SCHED-O checkbox variants): one row per
-    present leaf, no explode."""
-    key_items = aliased(keys.items())
-    frames: list[DataFrame] = []
+    leaf itself (e.g. the SCHED-O checkbox variants): one row if the
+    leaf is present. Terms coalesce to [] (concat of a NULL is NULL)."""
+    sql_types = {v: types[v] or "string" for by in groups.values() for v in by}
+
+    def record(members: dict[str, str]) -> str:
+        return "named_struct({})".format(", ".join(
+            f"{sql_str(v)}, {members.get(v, f'CAST(NULL AS {t})')}"
+            for v, t in sql_types.items()
+        ))
+
+    fields = ", ".join(f"{_q(v)}: {t}" for v, t in sql_types.items())
+    terms = []
     for gp, by_var in groups.items():
         if list(by_var.values()) == [[""]]:
             (var,) = by_var
             x = typed_sql(c.scalar_sql(gp), types[var])
-            frames.append(
-                src.filter(c.presence_sql(gp)).selectExpr(
-                    *key_items, *aliased([(var, x)])
-                )
-            )
-            continue
-        gsql, gnode = c.group(gp)
-        exploded = src.selectExpr(*key_items, f"explode({gsql}) AS _g")
-        members = (
-            (var, typed_sql(c.coalesce_sql(rels, gnode, "`_g`"), types[var]))
-            for var, rels in by_var.items()
-        )
-        frames.append(
-            exploded.selectExpr(*[f"`{k}`" for k in keys], *aliased(members))
-        )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f, allowMissingColumns=True)
-    return out
+            term = f"CASE WHEN {c.presence_sql(gp)} THEN array({record({var: x})}) END"
+        else:
+            gsql, gnode = c.group(gp)
+            members = {
+                var: typed_sql(c.coalesce_sql(rels, gnode, "`_g`"), types[var])
+                for var, rels in by_var.items()
+            }
+            term = f"transform({gsql}, `_g` -> {record(members)})"
+        terms.append(f"coalesce({term}, CAST(array() AS ARRAY<STRUCT<{fields}>>))")
+    return src.selectExpr(*aliased(keys.items()), f"inline(concat({', '.join(terms)}))")
 
 
 def build_rdb_table(
@@ -186,8 +187,7 @@ def build_rdb_table(
             *aliased(keys.items()), *one_table_columns(c, ones, typed)
         )
 
-    # MANY: explode each concrete repeating element, map leaves →
-    # variables, union by name
+    # MANY: one row per concrete repeating element, leaves → variables
     typemap = {r["variable"]: r["data_type"] for r in manys}
     by_group: dict[str, dict[str, list[str]]] = {}
     all_rels: dict[str, list[str]] = {}
@@ -198,8 +198,8 @@ def build_rdb_table(
             all_rels.setdefault(var, []).append(rel)
     # type each variable from its GLOBAL leaf set (all XSD versions in
     # all groups): per-group typing would give the same variable long
-    # in one frame and double in another, and the ragged union would
-    # silently widen — the typed schema must not depend on group order
+    # under one root and double under another, and the typed schema
+    # must not depend on group order
     types = {
         var: _spark_type(typemap[var], leaf_names(rels)) if typed else None
         for var, rels in all_rels.items()

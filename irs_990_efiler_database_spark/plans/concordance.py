@@ -189,7 +189,7 @@ _MASTER_TABLES: dict[str, list[dict]] = {}
 # (name, location, cardinality, group_roots) — group_roots only for
 # MANY slices; the PF Part VIII officer list spans both XSD vintages
 # (OfcrDirTrusteesOrKeyEmployee pre-2013, OfficerDirTrstKeyEmplGrp
-# post-2013) and the ragged unionByName merges them
+# post-2013) and the one projection emits both vintages' rows
 _DEFAULT_MASTER_SLICES = (
     ("SCHED-A-PART-01", "SCHED-A-PART-01", "ONE", None),
     ("SCHED-A-PART-02", "SCHED-A-PART-02", "ONE", None),

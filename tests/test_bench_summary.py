@@ -16,7 +16,7 @@ from tools import bench_summary as bs
 
 
 def _rec(label, total, contention, *, suspect=None, mc=None, sf=0.1,
-         scale=1.0):
+         scale=1.0, cpus=None):
     # >= 20 entries so _is_full() accepts it; `scale` inflates every
     # entry uniformly — the signature of host load, not a code change
     queries = {f"q{i:02d}": round((0.1 + i * 0.05) * scale, 4)
@@ -34,6 +34,8 @@ def _rec(label, total, contention, *, suspect=None, mc=None, sf=0.1,
         out["contention_suspect"] = suspect
     if mc is not None:
         out["mc_vs_best_known"] = mc
+    if cpus is not None:
+        out["cpus"] = cpus
     return out
 
 
@@ -136,3 +138,54 @@ def test_explicit_compare_of_clean_pair_stays_clean(tmp_path,
     verdict, _ = _last_json_line(capsys)
     assert verdict["suspect"] is False
     assert verdict["verdict"] == "FLAT"
+
+
+# a quiet 32-core record beside a noisier 4-core one: only the 4-core
+# record may ever be the yardstick of a 4-core run
+_HOSTS = [
+    dict(_rec("c32-quiet", 90.0, 1.2, suspect=False, mc=1.0, cpus=32),
+         cpu_calibration_mc_sec=0.7),
+    dict(_rec("c32-quiet-2", 91.0, 1.25, suspect=False, mc=1.0, cpus=32),
+         cpu_calibration_mc_sec=0.71),
+    dict(_rec("c4-a", 300.0, 1.6, suspect=False, mc=1.0, cpus=4,
+              scale=3.0), cpu_calibration_mc_sec=2.5),
+    dict(_rec("no-cpus", 80.0, 1.1, suspect=False, mc=1.0),
+         cpu_calibration_mc_sec=0.5),
+]
+
+
+def test_bench_reference_is_the_quietest_record_of_the_same_cpus(
+        tmp_path, monkeypatch):
+    """bench.py's contention yardstick compares like with like: the
+    quietest reference and ``best_known_mc_sec`` come only from records
+    of the run's own (sf, cpus) — never a 32-core record (or one that
+    predates the ``cpus`` stamp) for a 4-core run."""
+    import bench
+
+    _write(tmp_path, monkeypatch, _HOSTS)
+    monkeypatch.setattr(bench, "REPO", tmp_path)
+    run = _rec("c4-run", 303.0, 1.6, scale=3.03)["queries"]
+    got = bench._vs_quietest_reference(run, 0.1, 4)
+    assert got["quietest_ref"]["label"] == "c4-a"
+    assert got["best_known_mc_sec"] == 2.5
+    assert got["contention_suspect"] is False
+    # no record of the run's core count: no reference at all
+    assert bench._vs_quietest_reference(run, 0.1, 8) == {}
+
+
+def test_compare_pairs_records_of_the_same_cpus(tmp_path, monkeypatch,
+                                               capsys):
+    _write(tmp_path, monkeypatch, [
+        *_HOSTS,
+        _rec("c4-b", 303.0, 1.62, suspect=False, mc=1.0, cpus=4,
+             scale=3.03),
+    ])
+    bs.compare()
+    verdict, out = _last_json_line(capsys)
+    assert "A: c4-a" in out and "B: c4-b" in out
+    assert verdict["verdict"] == "FLAT"
+    # explicit indices across core counts (or against a record
+    # without cpus) are refused, like a cross-sf pair
+    for other in (0, 3):
+        with pytest.raises(SystemExit, match="core counts"):
+            bs.compare(other, 4)

@@ -1359,3 +1359,27 @@ def test_incremental_build_writes_the_same_files_for_the_same_input(
             layouts.append(_files_per_dir(tmp_path / run / "out"))
     assert layouts[0] == layouts[1]
     assert set(layouts[0].values()) == {1}, layouts[0]
+
+
+def test_repeating_group_tables_scan_the_parse_once(spark, tmp_path):
+    """A MANY table is ONE projection over the parse however many
+    repeating-group roots it has (DTK has eight, SJ compensation two):
+    no stage of its build runs more tasks than there are input
+    partitions. A frame per root would scan the parse once per root."""
+    tables = ["F9-P07-TABLE-01-DTK-COMPENSATION", "SJ-P02-T01-COMPENSATION"]
+    tracker = spark.sparkContext.statusTracker()
+    with _one_partition_per_file(spark):
+        n_inputs = _input_partitions(spark)
+        assert n_inputs > 8
+        seen = set(tracker.getJobIdsForGroup())
+        res = build_database(spark, str(tmp_path / "out"), xml_glob=GLOBS, tables=tables)
+    assert all(res.rows[t] > 0 for t in tables), res.rows
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    tasks = {
+        s: info.numTasks
+        for j in tracker.getJobIdsForGroup()
+        if j not in seen
+        for s in tracker.getJobInfo(j).stageIds
+        if (info := tracker.getStageInfo(s)) is not None
+    }
+    assert tasks and max(tasks.values()) <= n_inputs, (n_inputs, tasks)

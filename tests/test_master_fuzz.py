@@ -116,7 +116,7 @@ def test_master_many_slices_match_golden(spark, tmp_path):
     doc through build_rdb_table's explode path vs the golden.
     SCHED-H-PART-05 declares TWO roots in one slice (hospital
     facilities + non-hospital facilities), exercising the ragged
-    unionByName merge on master-sourced groups."""
+    multi-root projection on master-sourced groups."""
     from irs_990_efiler_database_spark.extract.golden import golden_rdb_rows
     from irs_990_efiler_database_spark.extract.rdb_builder import (
         build_rdb_table,
@@ -168,7 +168,7 @@ def test_master_many_slices_match_golden(spark, tmp_path):
             # same rows through build_rdb_table(typed=True), compared
             # as the golden string values pushed through the reference
             # cast for the schema dtype the build chose — exercises
-            # the GLOBAL-leaf typing + ragged typed union per arm
+            # the GLOBAL-leaf typing + ragged typed projection per arm
             tdf = build_rdb_table(df, table, typed=True)
             tdtypes = dict(tdf.dtypes)
             got_t = {}

@@ -144,19 +144,19 @@ def table() -> None:
     if not lines:
         print("no BENCH_SUMMARY.jsonl — run `backfill` first")
         return
-    print("| # | ts | label | sf | entries | total s | contention |")
-    print("|---|---|---|---|---|---|---|")
+    print("| # | ts | label | sf | cpus | entries | total s | contention |")
+    print("|---|---|---|---|---|---|---|---|")
     for i, x in enumerate(lines):
         mark = "*" if _is_full(x) else " "
         print(
             f"| {i}{mark} | {x.get('ts', '')[:19]} | "
-            f"{x.get('label', '')[:48]} | {x.get('sf')} | "
+            f"{x.get('label', '')[:48]} | {x.get('sf')} | {x.get('cpus')} | "
             f"{len(x.get('queries', {}))} | "
             f"{x.get('value')} | {x.get('contention_ratio')} |"
         )
     print(
         "\n(* = full per-entry record; pass these GLOBAL indices to"
-        " `compare i j` — same-sf pairs only)"
+        " `compare i j` — same (sf, cpus) pairs only)"
     )
 
 
@@ -183,9 +183,16 @@ def suspect_reasons(rec: dict) -> list[str]:
     return reasons
 
 
+def _like(rec: dict) -> tuple:
+    """What a comparable pair must share: the scale factor and the
+    session's core count (a record without ``cpus`` matches only
+    another record without it)."""
+    return rec.get("sf"), rec.get("cpus")
+
+
 def compare(ia: int | None = None, ib: int | None = None) -> None:
     """Default: the latest NON-SUSPECT full run vs the previous
-    non-suspect full run AT THE SAME scale factor — a loaded run must
+    non-suspect full run AT THE SAME (sf, cpus) — a loaded run must
     never be silently presented as a performance verdict (the r12
     failure: no-arg compare printed `FASTER (0.917)` across a
     contention-2.54/1.73 pair). When no clean pair exists the tool
@@ -201,11 +208,12 @@ def compare(ia: int | None = None, ib: int | None = None) -> None:
                     f"record #{i} ({rec.get('label', '')!r}) has no full "
                     "per-entry table — pick a *-marked row"
                 )
-        if a.get("sf") != b.get("sf"):
+        if _like(a) != _like(b):
             raise SystemExit(
-                f"records #{ia} (sf {a.get('sf')}) and #{ib} "
-                f"(sf {b.get('sf')}) ran at different scale factors — "
-                "per-entry ratios across sf are meaningless"
+                f"records #{ia} (sf, cpus {_like(a)}) and #{ib} "
+                f"(sf, cpus {_like(b)}) ran at different scale factors "
+                "or core counts — per-entry ratios across them are "
+                "meaningless"
             )
     else:
         # backfilled driver DIGESTS carry no timestamp and append after
@@ -219,16 +227,16 @@ def compare(ia: int | None = None, ib: int | None = None) -> None:
         if not fulls:
             print("no full runs; run `backfill` first")
             return
-        sf = fulls[-1].get("sf")
-        same_sf = [x for x in fulls if x.get("sf") == sf]
-        clean = [x for x in same_sf if not suspect_reasons(x)]
+        sf, cpus = _like(fulls[-1])
+        same = [x for x in fulls if _like(x) == (sf, cpus)]
+        clean = [x for x in same if not suspect_reasons(x)]
         if len(clean) < 2:
             print(
                 f"REFUSING no-arg compare: fewer than two load-clean "
-                f"full runs at sf {sf} (clean={len(clean)}, "
-                f"total={len(same_sf)}). Candidates:"
+                f"full runs at sf {sf}, cpus {cpus} (clean={len(clean)}, "
+                f"total={len(same)}). Candidates:"
             )
-            for x in same_sf:
+            for x in same:
                 i = lines.index(x)
                 why = suspect_reasons(x) or ["clean"]
                 print(
