@@ -108,9 +108,8 @@ def load_table(
 # deterministic (sort-before-repartition is on by default), and no
 # registered query depends on scan partitioning (the two
 # spark_partition_id consumers are partitioning-invariant by design).
-# SPARK_GRAFT_NO_SCAN_REBALANCE=1 disables it (A/B measurement hook).
 _REBALANCE_TABLES = frozenset({"documents", "embeddings"})
-_SPLITS_CACHE: dict[tuple[str, str, int], int] = {}
+_SPLITS_CACHE: dict[tuple[str, str, str | None], int] = {}
 
 # Spark size confs accept byte-suffixed strings ("128m", "1g"); a
 # caller-provided session may have set maxPartitionBytes that way, and
@@ -161,23 +160,29 @@ def input_bytes(path: str) -> int | None:
         return None
 
 
-def _rebalance_narrow_scan(
-    spark: SparkSession, df: DataFrame, path: str
-) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_NO_SCAN_REBALANCE") == "1":
-        return df
-    cores = spark.sparkContext.defaultParallelism
+def bounded_input(spark: SparkSession, path: str) -> bool:
+    """Whether the table at *path* is small enough for a local sizing
+    heuristic: its on-disk bytes are at most one normal task per core
+    (``defaultParallelism`` x ``maxPartitionBytes``). Fails closed: a
+    path that cannot be sized locally (non-local storage, a missing
+    path) counts as production scale, since listing object storage is
+    driver-side work no ``load_table`` call should add."""
     size = input_bytes(path)
     if size is None:
-        # non-local storage (s3a/hdfs): listing is driver-side work we
-        # refuse to add per load_table call; at object-store scale the
-        # input is many files and the rebalance is not needed
-        return df
+        return False
     max_part = _parse_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
-    if size > cores * max_part:
+    return size <= spark.sparkContext.defaultParallelism * max_part
+
+
+def _rebalance_narrow_scan(
+    spark: SparkSession, df: DataFrame, path: str
+) -> DataFrame:
+    if not bounded_input(spark, path):
         return df
+    cores = spark.sparkContext.defaultParallelism
+    max_part = spark.conf.get("spark.sql.files.maxPartitionBytes", None)
     # max_part in the key: a mid-session conf change alters the split
     # count a fresh scan would yield, so a cached count from the old
     # setting must not decide the rebalance (only the heuristic, never

@@ -79,7 +79,12 @@ def _all_builders(selected: list[str]) -> dict[str, tuple]:
 
     Both builds call this BEFORE their source read or stream start:
     registration clears the cached superset parse schema, so the
-    slice's xpaths have to be registered before the parse."""
+    slice's xpaths have to be registered before the parse. A name
+    given twice is refused: its two writes would overwrite one path at
+    once."""
+    repeated = sorted({t for t in selected if selected.count(t) > 1})
+    if repeated:
+        raise ValueError(f"tables named more than once: {', '.join(repeated)}")
     known = {"CORE", *table_names(), *schedn_table_names(), *master_table_names()}
     for t in selected:
         if t in known:

@@ -154,9 +154,9 @@ def _drain_knobs(
     production stream wants the session's shuffle-partition count on
     RocksDB.
 
-    Bounded-drain guard (the same fail-closed shape as catalog's scan
-    rebalance): the staged input's on-disk bytes must fit within one
-    normal task per core (cores × maxPartitionBytes). At 100 TB the
+    Bounded-drain guard (``catalog.bounded_input``, shared with the
+    scan rebalance): the staged input's on-disk bytes must fit within
+    one normal task per core (cores × maxPartitionBytes). At 100 TB the
     guard fails and the defaults revert to the session's RocksDB
     provider with the session's shuffle-partition count — no local
     constant ever reaches a real deployment.
@@ -173,17 +173,9 @@ def _drain_knobs(
     (the API refuses the HDFS provider), so TWS callers pass
     ``python_heavy=True, store="rocksdb"`` and this helper only makes
     their partition count scale-adaptive."""
-    from ..catalog import _parse_bytes, input_bytes, table_path
+    from ..catalog import bounded_input, table_path
 
-    # None (non-local storage) is treated as production scale
-    size = input_bytes(table_path(sf_dir, "events"))
-    cores = spark.sparkContext.defaultParallelism
-    max_part = _parse_bytes(
-        spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024)
-        )
-    )
-    if size is None or size > cores * max_part:
+    if not bounded_input(spark, table_path(sf_dir, "events")):
         # production scale: session shuffle partitions size the store
         # count; TWS keeps its mandatory RocksDB pin, everything else
         # uses the session provider (RocksDB in the tuned factory)

@@ -29,7 +29,6 @@ from . import register
 
 _SGN_B = 64      # hashed feature buckets
 _SGN_ITERS = 3   # full-batch sign-gradient steps
-_SGN_PERSIST_W = True  # truncate per-iteration weight lineage (see loop)
 
 
 def _signgd_iter_sql(i: int) -> str:
@@ -180,8 +179,7 @@ def stat_signgd_text_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # times — measured superlinear growth, +0.65/+0.72/+1.29 s per
         # added iteration at sf0.1). Persisting truncates the recursion
         # at 64 rows per step; values are integer-exact either way.
-        if _SGN_PERSIST_W:
-            w = tracked_persist(w)
+        w = tracked_persist(w)
     zf = (
         feat.join(F.broadcast(w), "bucket")
         .groupBy("doc_id")

@@ -1272,6 +1272,33 @@ def test_table_failure_is_attributed_in_both_builds(
         )
 
 
+def test_repeated_table_names_fail_closed_in_both_builds(spark, tmp_path):
+    """A table named twice raises one ValueError naming it before any
+    read, in the batch and the incremental build alike, and nothing is
+    written. Run, its two writes overwrote one path at once: the rows
+    were counted twice and the table got a nested partition directory
+    that ``read_table`` rejected."""
+    from irs_990_efiler_database_spark import jobs
+    from irs_990_efiler_database_spark.sources.xml_source import (
+        write_return_bundle,
+    )
+
+    t = "SJ-P01-T00-CHECKLIST"
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=f"more than once: {t}$"):
+        jobs.build_database(
+            spark, str(out), xml_glob="tests/fixtures/*.xml", tables=[t, t]
+        )
+    landing = tmp_path / "landing"
+    write_return_bundle(spark, "tests/fixtures/*.xml", str(landing), 1)
+    with pytest.raises(ValueError, match=f"more than once: {t}$"):
+        jobs.build_database_incremental(
+            spark, str(out), str(landing), str(tmp_path / "ckpt"),
+            tables=["CORE", t, t],
+        )
+    assert not out.exists()
+
+
 @contextmanager
 def _one_partition_per_file(spark):
     """Every fixture file (a few KB) becomes its own input partition

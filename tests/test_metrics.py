@@ -36,9 +36,10 @@ def test_projection_operator_shuffles_nothing_at_runtime(spark, monkeypatch):
     (legitimate, guarded) exchange upstream of the operator, which is a
     scan-layout concern, not the operator's — the operator itself must
     stay shuffle-free."""
+    from irs_990_efiler_database_spark import catalog
     from irs_990_efiler_database_spark.queries.text_ops import text_pii_redact
 
-    monkeypatch.setenv("SPARK_GRAFT_NO_SCAN_REBALANCE", "1")
+    monkeypatch.setattr(catalog, "_REBALANCE_TABLES", frozenset())
     df = text_pii_redact(spark, SF)
     df.collect()
     s = summarize_execution(df)

@@ -3,7 +3,7 @@
 single-row-group parquet file executes its whole scan stage as one
 task, so load_table round-robin-rebalances the text/vector tables to
 the session's default parallelism — guarded so it can never fire on
-production-scale inputs, overridable per call, and disableable by env.
+production-scale inputs and overridable per call.
 """
 
 from __future__ import annotations
@@ -40,13 +40,6 @@ def test_per_call_override_wins_both_ways(spark):
     )
     assert "RoundRobinPartitioning" in _plan(
         load_table(spark, SF, "lineitem", rebalance=True)
-    )
-
-
-def test_env_kill_switch(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_SCAN_REBALANCE", "1")
-    assert "RoundRobinPartitioning" not in _plan(
-        load_table(spark, SF, "documents")
     )
 
 
